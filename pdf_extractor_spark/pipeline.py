@@ -13,19 +13,27 @@ One declarative DataFrame program replaces the reference's stages 2-10
 Physical shape: one explicit Exchange, one ArrowEvalPython, everything else
 whole-stage codegen. Per-doc failures are ``ok=false`` rows, never task
 failures (reference main.py:852-854 continue-on-error).
+
+Every job path (fresh/resumed run, streaming micro-batch, repair round,
+refresh) commits through ``_commit_with_lineage``: the snapshot write is
+the one action over the extracted frame, its counts are observed on that
+write, and lineage is read back from the written files — so each doc is
+extracted exactly once and no extracted text is cached.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from pdf_extractor_spark.extract.udfs import ExtractContext, extract_udf, make_extract_udf
+from pdf_extractor_spark.extract.udfs import ExtractContext, make_extract_udf
 from pdf_extractor_spark.plans.partitioning import salted_repartition
 from pdf_extractor_spark.sources import catalog
 
 RESULT_COLUMNS = ["url", "warc_ts", "lang", "text", "spans", "n_blocks", "kind", "ok", "error"]
+
+_NOTHING = {"snapshot": None, "rows": 0, "marker": None}
 
 
 def extract_documents(
@@ -40,12 +48,13 @@ def extract_documents(
     already-bucketed tables); pass it on big scans so the UDF stage is
     salted against host skew. ``context`` (M4) is a per-run option set
     closed over by the UDF — one serialized object per task, applied to
-    every document (reference src/extractor.py:161-183).
+    every document (reference src/extractor.py:161-183). The UDF is built
+    per call, so a job in a later SparkSession never reuses the JVM
+    function (and accumulator) of an earlier, stopped one.
     """
     if n_partitions:
         df = salted_repartition(df, n_partitions, heavy=heavy)
-    udf = extract_udf if context is None else make_extract_udf(context)
-    extracted = df.withColumn("_x", udf(F.col("html")))
+    extracted = df.withColumn("_x", make_extract_udf(context)(F.col("html")))
     keep = [c for c in ["url", "warc_ts", "lang", "html"] if c in df.columns]
     return extracted.select(
         *keep,
@@ -58,6 +67,15 @@ def extract_documents(
     )
 
 
+def _extract_sized(
+    todo: DataFrame, n_partitions: int | None, context: ExtractContext | None
+) -> DataFrame:
+    """The committed shape: extraction results with html (the 100-TB
+    column) replaced by its length, which lineage sums as bytes_in."""
+    extracted = extract_documents(todo, n_partitions=n_partitions, context=context)
+    return extracted.withColumn("bytes_in", F.length("html")).drop("html")
+
+
 def run_extraction_job(
     spark: SparkSession,
     input_df: DataFrame,
@@ -68,37 +86,50 @@ def run_extraction_job(
 ) -> dict:
     """Resumable batch job: extract everything not yet committed.
 
-    Returns a small metrics dict (driver-side; one count + one commit).
-    A killed run leaves no visible partial snapshot; re-running picks up
-    exactly the unprocessed urls (catalog.remaining anti-join).
+    Returns a small metrics dict (driver-side). Emptiness is decided on the
+    resume frontier, before extraction; the extraction itself runs once,
+    inside the snapshot write. A killed run leaves no visible partial
+    snapshot; re-running picks up exactly the unprocessed urls
+    (catalog.remaining anti-join).
     """
     todo = catalog.remaining(spark, input_df, output_table) if resume else input_df
-    extracted = extract_documents(todo, n_partitions=n_partitions, context=context)
-    # keep html out of the committed output (it's the 100-TB column); lineage
-    # needs its length, so compute sizes before dropping.
-    sized = extracted.withColumn("bytes_in", F.length("html")).drop("html")
-    sized = sized.persist()
-    try:
-        return _commit_with_lineage(sized, output_table)
-    finally:
-        sized.unpersist()
+    if todo.isEmpty():
+        # a fully-resumed re-run (or an empty time window / micro-batch)
+        # must not append empty snap_N + _lineage dirs on every invocation
+        return dict(_NOTHING)
+    metrics, _ = _commit_with_lineage(
+        _extract_sized(todo, n_partitions, context), output_table
+    )
+    return metrics
 
 
-def _commit_with_lineage(sized: DataFrame, output_table: str) -> dict:
-    """Commit an extraction-result frame (html already dropped, bytes_in
-    precomputed) as one snapshot plus its per-partition lineage rows.
-    ``sized`` must be persisted by the caller (it is counted, committed,
-    and aggregated). Empty input -> NO snapshot: a fully-resumed re-run
-    (or an empty time window in process_in_batches) must not append empty
-    snap_N + _lineage dirs on every invocation."""
-    if sized.isEmpty():
-        return {"snapshot": None, "rows": 0, "marker": None}
-    snap_id = catalog.commit_snapshot(sized, output_table)
+def _commit_with_lineage(sized: DataFrame, output_table: str) -> tuple[dict, int]:
+    """Commit an extraction-result frame (html dropped, bytes_in
+    precomputed) as one snapshot plus its per-partition lineage rows;
+    returns the job metrics and the number of ok rows committed.
+
+    The write is the only action over ``sized``: its row and ok counts are
+    observed on the write itself, and the lineage ``(partition_id,
+    doc_count, bytes_in, bytes_out, checkpoint_marker)`` is aggregated from
+    the new snapshot's files, ``partition_id`` being the write task that
+    produced each file. Callers decide emptiness beforehand on a frame
+    without the extraction UDF; a write that still comes out empty
+    (refresh's near-dup gate dropped every survivor) is withdrawn, so no
+    job leaves an empty snapshot behind."""
+    obs = Observation()
+    observed = sized.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        F.count_if(F.col("ok")).alias("ok"),
+    )
+    snap_id = catalog.commit_snapshot(observed, output_table)
+    counts = obs.get
+    if counts["rows"] == 0:
+        catalog.withdraw_snapshot(output_table, snap_id)
+        return dict(_NOTHING), 0
     marker = f"snap_{snap_id}"
-    # bytes_in is already a length here -> sum it directly (lineage_for's
-    # length() form is for DataFrames that still carry the binary column)
     lineage = (
-        sized.withColumn("partition_id", F.spark_partition_id())
+        catalog.read_snapshot(sized.sparkSession, output_table, snap_id)
         .groupBy("partition_id")
         .agg(
             F.count(F.lit(1)).alias("doc_count"),
@@ -108,8 +139,7 @@ def _commit_with_lineage(sized: DataFrame, output_table: str) -> dict:
         .withColumn("checkpoint_marker", F.lit(marker))
     )
     catalog.commit_snapshot(lineage, os.path.join(output_table, "_lineage"))
-    n_rows = sized.count()
-    return {"snapshot": snap_id, "rows": n_rows, "marker": marker}
+    return {"snapshot": snap_id, "rows": counts["rows"], "marker": marker}, counts["ok"]
 
 
 _BAND_INDEX_DDL = "id STRING, band INT, key STRING"
@@ -187,35 +217,35 @@ def run_refresh_job(
             corpus_band_index = read_table(spark, idx_table)
 
     todo = catalog.remaining(spark, batch_df, output_table)
-    extracted = extract_documents(todo, n_partitions=n_partitions, context=context)
-    sized = (
-        extracted.withColumn("bytes_in", F.length("html")).drop("html").persist()
-    )
-    keep = sized
+    # the one persist on the job paths: the near-dup probe and the commit
+    # both read the extraction output, which must not be extracted twice
+    sized = _extract_sized(todo, n_partitions, context).persist()
     try:
         batch_in = batch_df.count()
         after_resume = sized.count()
-        corpus = catalog.read_committed(spark, output_table)
-        near_dropped = 0
-        if corpus is not None and after_resume > 0:
-            corpus_ok = corpus.filter(F.col("ok")).select("url", "text")
-            new_ok = sized.filter(F.col("ok")).select("url", "text")
-            matches = incremental_near_dups(
-                new_ok,
-                corpus_ok,
-                id_col="url",
-                text_col="text",
-                threshold=near_dup_threshold,
-                n_partitions=n_partitions,
-                max_bucket=max_bucket,
-                corpus_band_index=corpus_band_index,
-            )
-            dup_urls = matches.select(
-                F.col("new_id").alias("url")
-            ).distinct()
-            keep = sized.join(dup_urls, "url", "left_anti").persist()
-            near_dropped = after_resume - keep.count()
-        metrics = _commit_with_lineage(keep, output_table)
+        if after_resume == 0:
+            metrics = dict(_NOTHING)
+        else:
+            keep = sized
+            corpus = catalog.read_committed(spark, output_table)
+            if corpus is not None:
+                corpus_ok = corpus.filter(F.col("ok")).select("url", "text")
+                new_ok = sized.filter(F.col("ok")).select("url", "text")
+                matches = incremental_near_dups(
+                    new_ok,
+                    corpus_ok,
+                    id_col="url",
+                    text_col="text",
+                    threshold=near_dup_threshold,
+                    n_partitions=n_partitions,
+                    max_bucket=max_bucket,
+                    corpus_band_index=corpus_band_index,
+                )
+                dup_urls = matches.select(
+                    F.col("new_id").alias("url")
+                ).distinct()
+                keep = sized.join(dup_urls, "url", "left_anti")
+            metrics, _ = _commit_with_lineage(keep, output_table)
         if band_index_path is not None:
             if corpus_band_index is None:
                 # first build: index the FULL committed corpus (includes
@@ -235,9 +265,12 @@ def run_refresh_job(
                         band_index_buckets,
                     )
             elif metrics["rows"] > 0:
-                # incremental maintenance: only the committed batch's bands
+                # incremental maintenance: only the committed batch's bands,
+                # read back from its snapshot (re-deriving them from the
+                # frame would re-run the near-dup probe)
+                batch = catalog.read_snapshot(spark, output_table, metrics["snapshot"])
                 bands = with_minhash_bands(
-                    keep.filter(F.col("ok")).select("url", "text"),
+                    batch.filter(F.col("ok")).select("url", "text"),
                     id_col="url",
                     n_partitions=n_partitions,
                 )
@@ -252,13 +285,11 @@ def run_refresh_job(
             {
                 "batch_in": batch_in,
                 "already_committed": batch_in - after_resume,
-                "near_dup_dropped": near_dropped,
+                "near_dup_dropped": after_resume - metrics["rows"],
             }
         )
         return metrics
     finally:
-        if keep is not sized:
-            keep.unpersist()
         sized.unpersist()
 
 
@@ -289,13 +320,12 @@ def rerun_failed(
         if failed.isEmpty():
             break
         todo = input_df.join(failed, on="url", how="left_semi")
-        extracted = extract_documents(todo, n_partitions=n_partitions, context=context)
-        sized = extracted.withColumn("bytes_in", F.length("html")).drop("html")
         # last-wins: newer snapshot rows supersede older ones for the same
         # url at read time via dedupe_latest
-        snap_id = catalog.commit_snapshot(sized, output_table)
-        n_fixed = sized.filter(F.col("ok")).count()
-        metrics.append({"snapshot": snap_id, "retried": sized.count(), "fixed": n_fixed})
+        m, n_fixed = _commit_with_lineage(
+            _extract_sized(todo, n_partitions, context), output_table
+        )
+        metrics.append({"snapshot": m["snapshot"], "retried": m["rows"], "fixed": n_fixed})
         if n_fixed == 0:
             break  # no progress; stop burning rounds
     return metrics

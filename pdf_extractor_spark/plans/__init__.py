@@ -1,1 +1,1 @@
-"""Physical-plan policies: partitioning, skew salting, lineage, resume."""
+"""Physical-plan policies: partitioning, skew salting, resume."""

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -114,6 +115,24 @@ def commit_snapshot(
         fh.write(str(n))
     _write_live(table_path, [n] if replace_live else prior + [n])
     return n
+
+
+def withdraw_snapshot(table_path: str, n: int) -> None:
+    """Take back snapshot ``n``, just committed by this writer (a commit
+    that turned out to hold no rows): it leaves the _live manifest in one
+    swap, then its marker and files go, so its id is reused."""
+    _write_live(table_path, [i for i in _committed_ids(table_path) if i != n])
+    os.remove(os.path.join(table_path, _MARKER.format(n=n)))
+    shutil.rmtree(os.path.join(table_path, f"snap_{n}"))
+
+
+def read_snapshot(spark: SparkSession, table_path: str, n: int) -> DataFrame:
+    """One snapshot's rows, each with the ``partition_id`` of the write
+    task that produced it: the index in its ``part-<index>-...`` file name,
+    equal to ``spark_partition_id()`` of the frame that was written."""
+    df = spark.read.parquet(os.path.join(table_path, f"snap_{n}"))
+    part = F.regexp_extract(F.col("_metadata.file_name"), r"^part-(\d+)", 1)
+    return df.withColumn("partition_id", part.try_cast("int"))
 
 
 def read_committed(spark: SparkSession, table_path: str) -> DataFrame | None:

@@ -54,11 +54,11 @@ def stream_extract_to_catalog(
     commit already covers, so a replayed epoch (crash after commit, before
     checkpoint write — the classic foreachBatch at-least-once window) adds
     zero duplicate rows. Checkpoint = offset tracking; catalog = the
-    exactly-once ledger. Returns a DataStreamWriter; call ``.start()``.
+    exactly-once ledger. Each micro-batch is a static DataFrame, so it runs
+    the batch job itself (run_extraction_job): one extraction, one snapshot
+    write, lineage read back from it. Returns a DataStreamWriter; call
+    ``.start()``.
     """
-    from pdf_extractor_spark.pipeline import extract_documents
-    from pdf_extractor_spark.sources import catalog
-
     stream = spark.readStream.schema(schema).parquet(input_path)
 
     def _commit(batch_df: DataFrame, epoch_id: int) -> None:
@@ -66,20 +66,12 @@ def stream_extract_to_catalog(
         # urls from PRIOR commits; a recrawl landing twice in one trigger
         # (or an availableNow backlog with re-deliveries) would otherwise
         # extract and commit the same url twice in one snapshot
-        batch_df = batch_df.dropDuplicates(["url"])
-        todo = catalog.remaining(batch_df.sparkSession, batch_df, output_table)
-        extracted = extract_documents(todo, n_partitions=n_partitions)
-        sized = extracted.withColumn("bytes_in", F.length("html")).drop("html")
-        # persist before the emptiness probe: extraction is the expensive
-        # stage, and without the cache both isEmpty() AND the snapshot write
-        # would execute the full extraction UDF — doubling every batch
-        sized = sized.persist()
-        try:
-            if sized.isEmpty():
-                return  # replayed epoch fully covered by a prior commit
-            catalog.commit_snapshot(sized, output_table)
-        finally:
-            sized.unpersist()
+        run_extraction_job(
+            batch_df.sparkSession,
+            batch_df.dropDuplicates(["url"]),
+            output_table,
+            n_partitions=n_partitions,
+        )
 
     return (
         stream.writeStream.foreachBatch(_commit)

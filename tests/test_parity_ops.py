@@ -131,6 +131,21 @@ def test_rerun_failed_repairs(spark, tmp_path, monkeypatch):
     assert latest.count() == 2
     assert latest.filter(~F.col("ok")).count() == 0
 
+    # the repair snapshot carries lineage like any other commit: it sums to
+    # the retried row, its refetched payload and its extracted text
+    from pdf_extractor_spark.extract.udfs import extract_one
+
+    lineage = catalog.read_committed(spark, os.path.join(table, "_lineage"))
+    repair = lineage.filter(F.col("checkpoint_marker") == f"snap_{metrics[0]['snapshot']}")
+    sums = repair.agg(
+        F.sum("doc_count").alias("docs"),
+        F.sum("bytes_in").alias("bytes_in"),
+        F.sum("bytes_out").alias("bytes_out"),
+    ).first()
+    assert sums["docs"] == metrics[0]["retried"] == 1
+    assert sums["bytes_in"] == len(good_html)
+    assert sums["bytes_out"] == len(extract_one(good_html)[0]) > 0
+
 
 def test_render_statement_roundtrip(spark):
     from pdf_extractor_spark.plans.reconstruct import (

@@ -66,6 +66,35 @@ def test_refresh_job_noop_batch_commits_nothing(spark, tmp_path):
     assert m["near_dup_dropped"] == 0
 
 
+def test_refresh_job_all_near_dups_commits_nothing(spark, tmp_path):
+    """A batch whose every survivor is a near-dup of the corpus is only
+    known to be empty once its snapshot write has run; that write is
+    withdrawn, so no empty snapshot (and no lineage for it) is left."""
+    import os
+
+    from pdf_extractor_spark.sources import catalog
+
+    table = str(tmp_path / "corpus")
+    base = spark.createDataFrame(_rows(range(10)), SCHEMA)
+    run_extraction_job(spark, base, table, n_partitions=4)
+    mirrors = _rows(
+        range(5), url_override=lambda i: f"https://mirror.example/copy/{i}"
+    )
+    m = run_refresh_job(
+        spark, spark.createDataFrame(mirrors, SCHEMA), table, n_partitions=4
+    )
+    assert m["snapshot"] is None and m["marker"] is None
+    assert m["rows"] == 0
+    assert m["near_dup_dropped"] == 5
+    assert [r["snapshot_id"] for r in catalog.list_snapshots(spark, table).collect()] == [1]
+    assert not os.path.exists(os.path.join(table, "snap_2"))
+    lineage = catalog.read_committed(spark, os.path.join(table, "_lineage"))
+    assert {r["checkpoint_marker"] for r in lineage.collect()} == {"snap_1"}
+    # the withdrawn id is reused by the next commit
+    fresh = spark.createDataFrame(_rows(range(10, 12)), SCHEMA)
+    assert run_extraction_job(spark, fresh, table)["snapshot"] == 2
+
+
 def test_refresh_job_bootstrap_empty_corpus(spark, tmp_path):
     """Refresh into a not-yet-existing table degrades to a plain first
     extraction run (no probe, everything commits)."""

@@ -179,6 +179,7 @@ def test_stream_extract_exactly_once_per_url(spark, tmp_path):
     once — across incremental waves AND across a forced epoch replay (the
     checkpoint is deleted, the stream reprocesses everything, and the
     catalog absorbs the replay with zero duplicate rows)."""
+    import os
     import shutil
 
     from pdf_extractor_spark.extract.udfs import extract_one
@@ -214,13 +215,35 @@ def test_stream_extract_exactly_once_per_url(spark, tmp_path):
     counts = done.groupBy("url").count().collect()
     assert len(counts) == 40 and all(r["count"] == 1 for r in counts)
 
+    # every micro-batch snapshot has lineage summing to its committed rows
+    lineage_table = os.path.join(table, "_lineage")
+
+    def lineage_docs():
+        lineage = catalog.read_committed(spark, lineage_table)
+        return {
+            r["checkpoint_marker"]: r["docs"]
+            for r in lineage.groupBy("checkpoint_marker")
+            .agg(F.sum("doc_count").alias("docs"))
+            .collect()
+        }
+
+    per_snapshot = {
+        f"snap_{r['_snapshot']}": r["count"]
+        for r in done.groupBy("_snapshot").count().collect()
+    }
+    assert lineage_docs() == per_snapshot
+
     # forced replay: drop the checkpoint -> the stream reprocesses ALL
-    # input; the catalog anti-join must absorb it (no new rows, no dups)
+    # input; the catalog anti-join must absorb it (no new rows, no dups,
+    # no new snapshot, no new lineage)
     shutil.rmtree(ckpt)
     run_stream()
     done2 = catalog.read_committed(spark, table)
     counts2 = done2.groupBy("url").count().collect()
     assert len(counts2) == 40 and all(r["count"] == 1 for r in counts2)
+    assert catalog.list_snapshots(spark, table).count() == len(per_snapshot)
+    assert catalog.list_snapshots(spark, lineage_table).count() == len(per_snapshot)
+    assert lineage_docs() == per_snapshot
 
     # and the committed text is the golden pure-function output
     goldens = {r["url"]: extract_one(r["html"])[0] for r in corpus}
