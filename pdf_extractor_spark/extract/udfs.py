@@ -15,6 +15,10 @@ operator is the per-document remote call with retry + continue-on-error
 
 from __future__ import annotations
 
+import os
+import sys
+import zipimport
+
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -50,6 +54,53 @@ EXTRACT_RESULT_SCHEMA = StructType(
         StructField("error", StringType()),
     ]
 )
+
+
+def install_lazy_zip_invalidation() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's directory
+    only when the archive changed; idempotent, a no-op on Python >= 3.13.
+
+    Every PySpark task runs ``importlib.invalidate_caches()`` before its
+    UDFs (``pyspark.worker_util.setup_spark_files``). Before 3.13 that
+    re-reads the central directory of every zip on ``sys.path`` —
+    ``pyspark.zip`` alone has ~1.3k entries — about 0.2 s of CPU per task
+    in a reused worker, more than the parse of a whole partition. 3.13
+    made the invalidation lazy; this backports the effect. An importer
+    re-reads when its archive's ``(st_mtime_ns, st_size)`` differs from
+    the stamp of its last read, or when the archive cannot be stat'ed, so
+    a zip replaced in place is still seen; a zip added later gets a new
+    importer, which reads its directory when it is made.
+
+    Called first in every UDF body, so each reused worker installs it on
+    its first engine task and the driver is never touched. The importers
+    that exist then are stamped as current without a re-read: that task's
+    set-up has just re-read every one of them."""
+    if sys.version_info >= (3, 13):
+        return
+    cls = zipimport.zipimporter
+    if hasattr(cls.invalidate_caches, "__wrapped__"):
+        return
+    eager = cls.invalidate_caches
+
+    def stamp(importer):
+        try:
+            st = os.stat(importer.archive)
+        except OSError:
+            return None
+        return st.st_mtime_ns, st.st_size
+
+    def invalidate_caches(self):
+        # stat before reading: a change during the read re-reads next time
+        now = stamp(self)
+        if now is None or now != getattr(self, "_read_stamp", None):
+            eager(self)
+            self._read_stamp = now
+
+    for finder in sys.path_importer_cache.values():
+        if isinstance(finder, cls):
+            finder._read_stamp = stamp(finder)
+    invalidate_caches.__wrapped__ = eager
+    cls.invalidate_caches = invalidate_caches
 
 
 def extract_one(
@@ -115,6 +166,7 @@ def make_extract_udf(context: ExtractContext | None = None):
         prohibition is per-row Python on the Spark side (no ``udf()``, no
         ``rdd.map``).
         """
+        install_lazy_zip_invalidation()
         rows = [extract_one(p, ctx) for p in payload]
         return pd.DataFrame(
             rows, columns=["text", "spans", "n_blocks", "kind", "ok", "error"]
@@ -159,6 +211,7 @@ def outline_udf(payload: pd.Series) -> pd.Series:
     parser (extract/outline.py). Same boundary discipline as
     table_cells_udf: batch-local Python only, total parser, never a task
     failure."""
+    install_lazy_zip_invalidation()
     from pdf_extractor_spark.extract.outline import extract_outline_one
 
     return pd.Series(
@@ -182,6 +235,7 @@ def table_cells_udf(payload: pd.Series) -> pd.Series:
     Python is batch-local inside the Arrow worker; a malformed payload
     yields its best-effort cells (the parser is total), never a task
     failure."""
+    install_lazy_zip_invalidation()
     from pdf_extractor_spark.extract.tables import extract_tables_one
 
     return pd.Series(

@@ -44,7 +44,7 @@ from pdf_extractor_spark.queries.q11_retrieval_phash import (
     g AS (SELECT i % 3 AS grp, sum(i) AS hugeint_sum, count(*) AS cnt
           FROM r GROUP BY i % 3)
     SELECT cast(grp AS BIGINT) AS grp,
-           hugeint_sum,
+           cast(hugeint_sum AS BIGINT) AS hugeint_sum,
            cnt,
            cast(grp AS BIGINT) * 1000000007 AS big_mul,
            round(cast(grp AS DOUBLE) / 7, 6) AS dbl_round,
@@ -57,16 +57,17 @@ from pdf_extractor_spark.queries.q11_retrieval_phash import (
 def a_protocol_canary(spark: SparkSession, sf: str) -> DataFrame:
     """Driver-vs-local protocol-drift canary (VERDICT r4 item 4): a
     table-free 3-row result with FIXED literal values covering every
-    numeric type family the driver hashes — BIGINT, an UNCAST sum()
-    aggregate (HUGEINT in DuckDB, the exact shape implicated in the
-    m_mixture_epochs r4 hash mismatch), a rounded DOUBLE, VARCHAR,
-    BOOLEAN, and DATE. Both engines compute the identical values by
-    construction (integer arithmetic over range(6), one IEEE-exact
-    division rounded to 6dp), so ANY driver hash mismatch on this row
-    set is provably environmental (DuckDB version / hash-normalization
-    drift), never a query bug — turning a red driver row elsewhere into
-    a five-minute diagnosis instead of a round-long hunt. Scale: no
-    table scan at all; constant 3-row plan."""
+    numeric type family the driver hashes — BIGINT, a sum() aggregate
+    (cast to BIGINT on the oracle side: its uncast HUGEINT form, the
+    shape implicated in the m_mixture_epochs hash mismatch, was
+    confirmed to hash differently at the driver and is retired), a
+    rounded DOUBLE, VARCHAR, BOOLEAN, and DATE. Both engines compute the
+    identical values by construction (integer arithmetic over range(6),
+    one IEEE-exact division rounded to 6dp), so ANY driver hash mismatch
+    on this row set is provably environmental (DuckDB version /
+    hash-normalization drift), never a query bug — turning a red driver
+    row elsewhere into a five-minute diagnosis instead of a round-long
+    hunt. Scale: no table scan at all; constant 3-row plan."""
     r = spark.range(6).select(
         (F.col("id") % 3).alias("grp"), F.col("id").alias("i")
     )

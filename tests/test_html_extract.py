@@ -272,22 +272,29 @@ _ADVERSARIAL = [
 ]
 
 
-def test_tag_memo_case_insensitive_and_capped():
+def test_tag_memo_case_insensitive_and_capped(monkeypatch):
     """The raw-spelling memo caches (lowered, flags) per spelling and stops
-    growing at its cap; behavior must be identical either side of the cap."""
+    growing at its cap; behavior must be identical either side of the cap.
+    Runs on a fresh memo so every bound is exercised, not already met."""
     from pdf_extractor_spark.extract import html_parser as hp
 
+    monkeypatch.setattr(hp, "_TAG_CACHE", {})
     page = "<DIV><P>Case crossing paragraph long enough to be real content.</p></div>"
     before = hp._assemble_blocks(page)
+    assert {"DIV", "P", "p", "div"} <= set(hp._TAG_CACHE)
+    # long tag spellings must never be pinned in the memo (byte bound, not
+    # just entry-count bound) — checked at the open-tag and the close-tag
+    # miss site separately
+    long_tags = [f"y{'A' * 500}{i}" for i in range(50)]
+    n_cached = len(hp._TAG_CACHE)
+    hp._assemble_blocks("".join(f"<{t}>t" for t in long_tags))
+    assert len(hp._TAG_CACHE) == n_cached
+    hp._assemble_blocks("".join(f"t</{t}>" for t in long_tags))
+    assert len(hp._TAG_CACHE) == n_cached
     # flood the memo past its cap with unique tag spellings
     junk = "".join(f"<x{i}>t</x{i}>" for i in range(hp._TAG_CACHE_MAX + 64))
     hp._assemble_blocks(junk)
-    assert len(hp._TAG_CACHE) <= hp._TAG_CACHE_MAX
-    # long tag spellings must never be pinned in the memo (byte bound, not
-    # just entry-count bound)
-    n_cached = len(hp._TAG_CACHE)
-    hp._assemble_blocks("".join(f"<y{'A' * 500}{i}>t</y{'A' * 500}{i}>" for i in range(50)))
-    assert len(hp._TAG_CACHE) == n_cached
+    assert len(hp._TAG_CACHE) == hp._TAG_CACHE_MAX
     assert all(len(k) <= hp._TAG_CACHE_MAX_KEY_LEN for k in hp._TAG_CACHE)
     after = hp._assemble_blocks(page)
     key = lambda b: (b.text, b.start, b.end, b.tag, b.path_flags, b.anchor_chars)
