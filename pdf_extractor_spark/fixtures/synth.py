@@ -2,7 +2,7 @@
 
 Every row is a pure function of ``(seed, doc_id)``: no wall clock, no global
 randomness. Hosts follow a Zipf(s≈1.2) over ~50 hosts so a few hosts are
-heavy — this is what the salted repartition (plans/partitioning.py) exercises.
+heavy — the url-keyed repartition (pipeline.extract_documents) must spread them.
 
 ~90% of payloads are synthesized HTML pages (main-content article + link-dense
 boilerplate + script/style noise + entity/multibyte text + ~5% malformed tags);

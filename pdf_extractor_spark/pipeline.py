@@ -5,7 +5,7 @@ One declarative DataFrame program replaces the reference's stages 2-10
 
     scan (url, html pruned-read)
       -> resume anti-join vs committed snapshots        [S3]
-      -> salted repartition (url bucket + heavy-host salt)
+      -> repartition by url (spreads a heavy host over every partition)
       -> vectorized extract UDF (the one Python stage)  [M1/M6]
       -> project result struct to columns
       -> snapshot commit + per-partition lineage append
@@ -28,7 +28,6 @@ import os
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from pdf_extractor_spark.extract.udfs import ExtractContext, make_extract_udf
-from pdf_extractor_spark.plans.partitioning import salted_repartition
 from pdf_extractor_spark.sources import catalog
 
 RESULT_COLUMNS = ["url", "warc_ts", "lang", "text", "spans", "n_blocks", "kind", "ok", "error"]
@@ -39,21 +38,23 @@ _NOTHING = {"snapshot": None, "rows": 0, "marker": None}
 def extract_documents(
     df: DataFrame,
     n_partitions: int | None = None,
-    heavy: list[str] | None = None,
     context: ExtractContext | None = None,
 ) -> DataFrame:
     """Pure transformation: (url, warc_ts, html, lang, ...) -> extraction results.
 
     ``n_partitions=None`` skips the explicit repartition (small inputs /
     already-bucketed tables); pass it on big scans so the UDF stage is
-    salted against host skew. ``context`` (M4) is a per-run option set
-    closed over by the UDF — one serialized object per task, applied to
-    every document (reference src/extractor.py:161-183). The UDF is built
-    per call, so a job in a later SparkSession never reuses the JVM
-    function (and accumulator) of an earlier, stopped one.
+    spread by url, which spreads a heavy host's pages too. ``context`` (M4)
+    is a per-run option set closed over by the UDF — one serialized object
+    per task, applied to every document (reference src/extractor.py:161-183).
+    The UDF is built per call, so a job in a later SparkSession never reuses
+    the JVM function (and accumulator) of an earlier, stopped one.
     """
     if n_partitions:
-        df = salted_repartition(df, n_partitions, heavy=heavy)
+        # the raw url, not pmod(xxhash64(url), n): repartition murmur3-hashes
+        # its keys, and pre-bucketing double-hashes — 19/32 partitions got
+        # data, with 4.5x stragglers
+        df = df.repartition(n_partitions, F.col("url"))
     extracted = df.withColumn("_x", make_extract_udf(context)(F.col("html")))
     keep = [c for c in ["url", "warc_ts", "lang", "html"] if c in df.columns]
     return extracted.select(
@@ -303,9 +304,11 @@ def rerun_failed(
 ) -> list[dict]:
     """V7 — bounded repair loop (reference main.py:321-337, :486-519):
     re-extract only the committed rows with ok=false (e.g. after a parser
-    fix), as new snapshots, for at most ``max_rounds`` rounds or until no
-    failures remain. The frontier shrinks by a semi-join each round — the
-    distributed form of the reference's retry-remaining set.
+    fix), as new snapshots, for at most ``max_rounds`` rounds. The frontier
+    shrinks by a semi-join each round — the distributed form of the
+    reference's retry-remaining set. A round that fixes every row it retried
+    ends the loop: the next could only find no failed url in the input, or
+    none at all.
     """
     metrics: list[dict] = []
     for _ in range(max_rounds):
@@ -316,18 +319,18 @@ def rerun_failed(
         done = read_latest(spark, output_table)
         if done is None:
             break
-        failed = done.filter(~F.col("ok")).select("url").distinct()
+        failed = done.filter(~F.col("ok")).select("url")
         if failed.isEmpty():
             break
         todo = input_df.join(failed, on="url", how="left_semi")
         # last-wins: newer snapshot rows supersede older ones for the same
-        # url at read time via dedupe_latest
+        # url at read time via read_latest
         m, n_fixed = _commit_with_lineage(
             _extract_sized(todo, n_partitions, context), output_table
         )
         metrics.append({"snapshot": m["snapshot"], "retried": m["rows"], "fixed": n_fixed})
-        if n_fixed == 0:
-            break  # no progress; stop burning rounds
+        if n_fixed in (0, m["rows"]):
+            break  # no progress, or nothing left that this input can fix
     return metrics
 
 

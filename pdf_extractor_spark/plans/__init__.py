@@ -1,1 +1,1 @@
-"""Physical-plan policies: partitioning, skew salting, resume."""
+"""Physical-plan helpers: host-skew diagnostic, statement model, reconstruction."""

@@ -1,28 +1,21 @@
-"""Explicit partitioning policy for the extraction hot path (north rule).
+"""Host-skew diagnostics for the extraction hot path.
 
-Why this exists: AQE fixes *shuffle-join* skew, but the expensive stage here
-is the Python UDF — if one Zipf-heavy host's giant pages all land in one
-partition, that partition becomes the straggler regardless of AQE. So:
+The UDF stage's exchange is keyed by url alone
+(``pipeline.extract_documents``), never by host: hashing the url already
+spreads one Zipf-heavy host's pages over every partition, so no host-level
+salt is needed and no action has to run before the write to find heavy
+hosts. A host-keyed layout is the thing to avoid — it puts a heavy host's
+whole share on one partition, which AQE cannot split because the skewed
+stage is the Python UDF, not a shuffle join (tests/test_scale_plan.py).
 
-- every row gets a ``bucket = pmod(xxhash64(url), n_buckets)`` — the analog of
-  an Iceberg ``PARTITIONED BY (bucket(B, url))`` layout;
-- rows whose host is a detected heavy hitter additionally get a salt, so one
-  host spreads over ``n_salts`` partitions (SURVEY.md §4.2).
-
-Heavy hitters are detected with a single cheap count-aggregation over the
-(pruned, html-free) scan — at 100 TB this reads only the url column.
+``heavy_hosts`` stays as a diagnostic for inputs whose host mix is unknown.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-DEFAULT_SALTS = 16
 HEAVY_HOST_FRACTION = 0.02  # a host with >2% of all rows is "heavy"
-
-
-def with_host(df: DataFrame, url_col: str = "url") -> DataFrame:
-    return df.withColumn("host", F.parse_url(F.col(url_col), F.lit("HOST")))
 
 
 def heavy_hosts(df: DataFrame, url_col: str = "url", fraction: float = HEAVY_HOST_FRACTION) -> list[str]:
@@ -31,7 +24,7 @@ def heavy_hosts(df: DataFrame, url_col: str = "url", fraction: float = HEAVY_HOS
     if total == 0:
         return []
     rows = (
-        with_host(df.select(url_col), url_col)
+        df.select(F.parse_url(F.col(url_col), F.lit("HOST")).alias("host"))
         .groupBy("host")
         .count()
         .filter(F.col("count") > fraction * total)
@@ -39,36 +32,3 @@ def heavy_hosts(df: DataFrame, url_col: str = "url", fraction: float = HEAVY_HOS
         .collect()
     )
     return sorted(r["host"] for r in rows if r["host"] is not None)
-
-
-def salted_repartition(
-    df: DataFrame,
-    n_partitions: int,
-    url_col: str = "url",
-    heavy: list[str] | None = None,
-    n_salts: int = DEFAULT_SALTS,
-) -> DataFrame:
-    """Repartition by (url-bucket, salt-for-heavy-hosts) for the UDF stage.
-
-    Light hosts hash by url alone (stable bucketing); heavy hosts get an
-    extra xxhash64-derived salt so no single host serializes one partition.
-    """
-    if heavy is None:
-        heavy = heavy_hosts(df, url_col)
-    hosted = with_host(df, url_col)
-    salted = hosted.withColumn(
-        "_salt",
-        F.when(
-            F.col("host").isin(heavy) if heavy else F.lit(False),
-            F.pmod(F.xxhash64(F.col(url_col), F.lit(1)), F.lit(n_salts)),
-        ).otherwise(F.lit(0)),
-    )
-    # repartition on the RAW columns: repartition() murmur3-hashes its
-    # expressions, so pre-bucketing with pmod(xxhash64(url), n) double-
-    # hashes — only ~n*(1-1/e) of n partitions get data and multi-bucket
-    # collisions build 4x stragglers (measured: 19/32 non-empty,
-    # max/min 4.5x, vs 32/32 and near-uniform on the raw columns). The
-    # explicit on-disk analog (Iceberg bucket(B, url)) lives in the
-    # storage layout, not in this exchange.
-    out = salted.repartition(n_partitions, F.col(url_col), F.col("_salt"))
-    return out.drop("_salt", "host")

@@ -223,3 +223,48 @@ def test_rerun_failed_converges_after_earlier_repair(spark, corpus, tmp_path):
     inp = _input_df(spark, corpus[:4], 2)
     metrics = rerun_failed(spark, inp, table, max_rounds=3)
     assert metrics == []  # nothing failed in the LATEST state -> no rounds
+
+
+def _commit_with_failures(spark, corpus, goldens, table):
+    """Commit six golden-ok docs, the first two with an empty (failing)
+    body; returns the six intact rows and the two failed urls."""
+    rows = [r for r in corpus if goldens[r["url"]][3]][:6]
+    broken = [dict(r, html=b"") if i < 2 else r for i, r in enumerate(rows)]
+    run_extraction_job(spark, _input_df(spark, broken, 2), table)
+    return rows, [r["url"] for r in rows[:2]]
+
+
+def test_rerun_failed_stops_after_a_round_that_fixes_everything(
+    spark, corpus, goldens, tmp_path, monkeypatch
+):
+    """A round that fixes every url it retried ends the loop: the committed
+    state is read once, with no confirmation round after it."""
+    from pdf_extractor_spark import pipeline
+
+    table = str(tmp_path / "t")
+    rows, _ = _commit_with_failures(spark, corpus, goldens, table)
+    reads = []
+    read_latest = pipeline.read_latest
+    monkeypatch.setattr(
+        pipeline, "read_latest", lambda *a: reads.append(a) or read_latest(*a)
+    )
+    metrics = pipeline.rerun_failed(spark, _input_df(spark, rows, 2), table, max_rounds=3)
+    assert [(m["retried"], m["fixed"]) for m in metrics] == [(2, 2)]
+    assert len(reads) == 1
+
+
+def test_rerun_failed_keeps_failures_absent_from_input(spark, corpus, goldens, tmp_path):
+    """A failed url the refetched input lacks stays ok=false; the loop ends
+    after the round that fixed the rest, without an empty trailing round."""
+    from pdf_extractor_spark.pipeline import read_latest, rerun_failed
+
+    table = str(tmp_path / "t")
+    rows, (fixed_url, absent_url) = _commit_with_failures(spark, corpus, goldens, table)
+    refetched = [r for r in rows if r["url"] != absent_url]
+    metrics = rerun_failed(spark, _input_df(spark, refetched, 2), table, max_rounds=3)
+    assert len(metrics) == 1
+    assert metrics[0]["snapshot"] is not None
+    assert (metrics[0]["retried"], metrics[0]["fixed"]) == (1, 1)
+    ok = {r["url"]: r["ok"] for r in read_latest(spark, table).collect()}
+    assert ok[fixed_url] is True and ok[absent_url] is False
+    assert sum(ok.values()) == len(rows) - 1

@@ -1,10 +1,10 @@
-"""Scale-posture tests: physical-plan hygiene + skew salting.
+"""Scale-posture tests: physical-plan hygiene + host-skew spread.
 
 These assert properties of the PLAN, not just results — at 100 TB the plan
 is the product: column pruning must keep the html binary column out of
 metadata-only scans, filters must reach the parquet reader, the hot path
-must contain exactly one Arrow Python stage, and salting must flatten
-Zipf-host compute skew.
+must contain exactly one Arrow Python stage, and the url-keyed exchange must
+flatten Zipf-host compute skew without a pre-pass action.
 """
 
 from __future__ import annotations
@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.pipeline import extract_documents
-from pdf_extractor_spark.plans.partitioning import heavy_hosts, salted_repartition
+from pdf_extractor_spark.plans.partitioning import heavy_hosts
 
 
 @pytest.fixture(scope="module")
@@ -78,7 +78,9 @@ def test_heavy_host_detection(spark, doc_parquet):
     assert heavy == ["host0.example"]
 
 
-def test_salting_flattens_partition_skew(spark, doc_parquet):
+def test_url_exchange_flattens_host_skew(spark, doc_parquet):
+    """The UDF stage's url-keyed exchange spreads a host holding 70% of the
+    rows as evenly as any other url set; a host-keyed one does not."""
     df = spark.read.parquet(doc_parquet)
     n_parts = 16
 
@@ -96,13 +98,26 @@ def test_salting_flattens_partition_skew(spark, doc_parquet):
     naive = df.repartition(n_parts, F.parse_url("url", F.lit("HOST")))
     naive_counts = partition_counts(naive)
 
-    salted = salted_repartition(df, n_parts, heavy=["host0.example"], n_salts=16)
-    salted_counts = partition_counts(salted)
+    url_counts = partition_counts(extract_documents(df, n_partitions=n_parts))
 
     assert max(naive_counts) > 0.6 * 2000
-    assert max(salted_counts) < 0.25 * 2000
-    # salted spread is reasonably even: max within 3x mean
-    assert max(salted_counts) < 3 * statistics.mean(salted_counts)
+    assert max(url_counts) < 0.25 * 2000
+    # the url-keyed spread is reasonably even: max within 3x mean
+    assert max(url_counts) < 3 * statistics.mean(url_counts)
+
+
+def test_building_extraction_frame_runs_no_job(spark, doc_parquet):
+    """extract_documents is a pure plan: no heavy-host count or collect (or
+    any other action) runs before the caller's write."""
+    df = spark.read.parquet(doc_parquet)
+    sc = spark.sparkContext
+    group = "extract-documents-plan-only"
+    sc.setJobGroup(group, "building the extraction frame")
+    try:
+        extract_documents(df, n_partitions=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_star_join_broadcasts_dims(spark):
