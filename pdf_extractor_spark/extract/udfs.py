@@ -15,6 +15,7 @@ operator is the per-document remote call with retry + continue-on-error
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
 import zipimport
@@ -71,7 +72,7 @@ def install_lazy_zip_invalidation() -> None:
     a zip replaced in place is still seen; a zip added later gets a new
     importer, which reads its directory when it is made.
 
-    Called first in every UDF body, so each reused worker installs it on
+    Installed by ``prepare_worker``, so each reused worker installs it on
     its first engine task and the driver is never touched. The importers
     that exist then are stamped as current without a re-read: that task's
     set-up has just re-read every one of them."""
@@ -101,6 +102,28 @@ def install_lazy_zip_invalidation() -> None:
             finder._read_stamp = stamp(finder)
     invalidate_caches.__wrapped__ = eager
     cls.invalidate_caches = invalidate_caches
+
+
+_worker_prepared = False
+
+
+def prepare_worker() -> None:
+    """Once-per-worker set-up, called first in every UDF body: the lazy zip
+    invalidation above, then ``gc.freeze()`` of the heap the worker has
+    built so far, on every Python version.
+
+    A reused PySpark worker runs a full garbage collection after every
+    task (``pyspark/daemon.py``), which walks every tracked object — ≈73k
+    of them after the imports, 25–34 ms of CPU per task. Frozen objects
+    are skipped by every later collection; cycles made by later tasks are
+    still collected. Freezing again would pin whatever a later task still
+    holds, hence once per worker."""
+    global _worker_prepared
+    if _worker_prepared:
+        return
+    _worker_prepared = True
+    install_lazy_zip_invalidation()
+    gc.freeze()
 
 
 def extract_one(
@@ -166,7 +189,7 @@ def make_extract_udf(context: ExtractContext | None = None):
         prohibition is per-row Python on the Spark side (no ``udf()``, no
         ``rdd.map``).
         """
-        install_lazy_zip_invalidation()
+        prepare_worker()
         rows = [extract_one(p, ctx) for p in payload]
         return pd.DataFrame(
             rows, columns=["text", "spans", "n_blocks", "kind", "ok", "error"]
@@ -211,7 +234,7 @@ def outline_udf(payload: pd.Series) -> pd.Series:
     parser (extract/outline.py). Same boundary discipline as
     table_cells_udf: batch-local Python only, total parser, never a task
     failure."""
-    install_lazy_zip_invalidation()
+    prepare_worker()
     from pdf_extractor_spark.extract.outline import extract_outline_one
 
     return pd.Series(
@@ -235,7 +258,7 @@ def table_cells_udf(payload: pd.Series) -> pd.Series:
     Python is batch-local inside the Arrow worker; a malformed payload
     yields its best-effort cells (the parser is total), never a task
     failure."""
-    install_lazy_zip_invalidation()
+    prepare_worker()
     from pdf_extractor_spark.extract.tables import extract_tables_one
 
     return pd.Series(

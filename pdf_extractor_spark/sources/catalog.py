@@ -10,6 +10,10 @@ Iceberg the engine depends on, behind a seam a real catalog can replace:
   the marker is written last, making the commit atomic: a killed job leaves
   an orphan snapshot dir that readers never see (reference analog: the upload
   cache that makes re-runs skip completed work, src/pdf_uploader.py:25,51-54);
+- the marker is the commit record: it holds the schema the snapshot was
+  written with (the Iceberg table-metadata analog), so readers pass it to
+  ``spark.read.schema`` instead of inferring it from Parquet footers, which
+  costs a Spark job per read;
 - ``read_committed`` unions all visible snapshots;
 - ``remaining`` is the resume anti-join: input rows whose key is absent from
   every committed snapshot (SURVEY.md §2.1 S3).
@@ -20,11 +24,13 @@ On a real cluster, swap these four functions for Iceberg
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 _SNAP_RE = re.compile(r"^snap_(\d+)$")
 _MARKER = "_committed_{n}"
@@ -68,6 +74,36 @@ def _committed_ids(table_path: str) -> list[int]:
     return markers
 
 
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable: the schema Spark
+    reads back from Parquet, whatever nullability the writer declared."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _recorded_schema(table_path: str, n: int) -> StructType | None:
+    """The schema ``commit_snapshot`` recorded in snapshot ``n``'s marker;
+    None for a marker that records none (legacy or hand-written)."""
+    try:
+        with open(os.path.join(table_path, _MARKER.format(n=n))) as fh:
+            record = json.load(fh)
+    except (OSError, ValueError):
+        return None
+    if not isinstance(record, dict) or "schema" not in record:
+        return None
+    return StructType.fromJson(record["schema"])
+
+
 def next_snapshot_id(table_path: str) -> int:
     existing = [
         int(m.group(1))
@@ -99,7 +135,8 @@ def commit_snapshot(
     (compaction/delete rewrite history files but must not flatten the
     last-wins order — re-stamping made read_latest return repaired-over
     rows again). ``replace_live`` makes this snapshot the ONLY live one
-    (the delete/compact swap)."""
+    (the delete/compact swap). The marker records the schema written, so
+    reads of the snapshot infer nothing."""
     os.makedirs(table_path, exist_ok=True)
     prior = _committed_ids(table_path)
     n = next_snapshot_id(table_path) if snapshot_id is None else snapshot_id
@@ -110,9 +147,10 @@ def commit_snapshot(
         )
     else:
         df = df.drop("_snapshot").withColumn("_snapshot", F.lit(n))
+    record = {"snapshot": n, "schema": _nullable(df.schema).jsonValue()}
     df.write.mode("overwrite").parquet(snap_dir)
     with open(os.path.join(table_path, _MARKER.format(n=n)), "w") as fh:
-        fh.write(str(n))
+        json.dump(record, fh)
     _write_live(table_path, [n] if replace_live else prior + [n])
     return n
 
@@ -129,8 +167,11 @@ def withdraw_snapshot(table_path: str, n: int) -> None:
 def read_snapshot(spark: SparkSession, table_path: str, n: int) -> DataFrame:
     """One snapshot's rows, each with the ``partition_id`` of the write
     task that produced it: the index in its ``part-<index>-...`` file name,
-    equal to ``spark_partition_id()`` of the frame that was written."""
-    df = spark.read.parquet(os.path.join(table_path, f"snap_{n}"))
+    equal to ``spark_partition_id()`` of the frame that was written.
+    Reads with the schema recorded at commit, so it launches no job."""
+    schema = _recorded_schema(table_path, n)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(os.path.join(table_path, f"snap_{n}"))
     part = F.regexp_extract(F.col("_metadata.file_name"), r"^part-(\d+)", 1)
     return df.withColumn("partition_id", part.try_cast("int"))
 
@@ -138,15 +179,22 @@ def read_snapshot(spark: SparkSession, table_path: str, n: int) -> DataFrame:
 def read_committed(spark: SparkSession, table_path: str) -> DataFrame | None:
     """Union of all committed snapshots; None when the table is empty.
 
-    Reads with ``mergeSchema`` and backfills ``_snapshot`` from the
-    ``snap_<n>`` directory name: snapshots committed before the column
-    existed (legacy tables being resumed/repaired) would otherwise drop the
-    column from the inferred schema — or surface nulls that break
-    ``read_latest``'s last-wins ordering."""
+    When every visible snapshot recorded the same schema at commit, reads
+    with it: no footer is opened and no job runs, and every row carries the
+    ``_snapshot`` stamped at commit. Otherwise (a marker that records no
+    schema, or a later snapshot that added a column) reads with
+    ``mergeSchema`` and backfills ``_snapshot`` from the ``snap_<n>``
+    directory name: snapshots committed before the column existed (legacy
+    tables being resumed/repaired) would otherwise drop the column from the
+    inferred schema — or surface nulls that break ``read_latest``'s
+    last-wins ordering."""
     ids = _committed_ids(table_path)
     if not ids:
         return None
     paths = [os.path.join(table_path, f"snap_{n}") for n in ids]
+    schemas = [_recorded_schema(table_path, n) for n in ids]
+    if schemas[0] is not None and all(s == schemas[0] for s in schemas):
+        return spark.read.schema(schemas[0]).parquet(*paths)
     df = spark.read.option("mergeSchema", "true").parquet(*paths)
     from_dir = F.regexp_extract(
         F.input_file_name(), r"/snap_(\d+)/", 1
@@ -191,7 +239,7 @@ def delete_where(
     if current is None:
         return 0
     old_ids = _committed_ids(table_path)
-    kept = current.join(keys.select(key).distinct(), on=key, how="left_anti")
+    kept = current.join(keys.select(key), on=key, how="left_anti")
     # preserve per-row _snapshot (last-wins history) and swap the _live
     # manifest in one rename; marker removal below is mere housekeeping
     n = commit_snapshot(
@@ -229,8 +277,11 @@ def remaining(
     ``left_anti`` on the key — at 100 TB the committed side is read with only
     the key column (column-pruned scan) and the join is a shuffle-free
     broadcast when the done-set is small, else a standard shuffled anti-join.
+    No ``distinct`` on the committed side: an anti-join ignores duplicate
+    keys, and a distinct would add two aggregates and an exchange over
+    every committed url.
     """
     done = read_committed(spark, table_path)
     if done is None:
         return input_df
-    return input_df.join(done.select(key).distinct(), on=key, how="left_anti")
+    return input_df.join(done.select(key), on=key, how="left_anti")

@@ -201,6 +201,35 @@ def test_snapshot_invisible_until_live_manifest_swap(spark, tmp_path):
     assert catalog._committed_ids(table) == [1]
 
 
+def test_later_snapshot_adding_a_column_reads_with_both(spark, tmp_path):
+    """Snapshots whose recorded schemas differ fall back to the schema-
+    merging read: rows of the earlier snapshot read null in the new column."""
+    from pdf_extractor_spark.pipeline import read_latest
+
+    table = str(tmp_path / "t")
+    catalog.commit_snapshot(
+        spark.createDataFrame([("u1", "a"), ("u2", "b")], "url string, text string"),
+        table,
+    )
+    catalog.commit_snapshot(
+        spark.createDataFrame([("u2", "c", 7)], "url string, text string, extra int"),
+        table,
+    )
+    committed = catalog.read_committed(spark, table)
+    assert set(committed.columns) == {"url", "text", "extra", "_snapshot"}
+    rows = committed.select("url", "text", "extra", "_snapshot").collect()
+    assert sorted(tuple(r) for r in rows) == [
+        ("u1", "a", None, 1),
+        ("u2", "b", None, 1),
+        ("u2", "c", 7, 2),
+    ]
+    latest = read_latest(spark, table).collect()
+    assert {r["url"]: (r["text"], r["extra"]) for r in latest} == {
+        "u1": ("a", None),
+        "u2": ("c", 7),
+    }
+
+
 def test_rerun_failed_converges_after_earlier_repair(spark, corpus, tmp_path):
     """A url repaired in an earlier snapshot must not be re-extracted in
     later rounds: the failed set comes from the LATEST state per url, not

@@ -9,14 +9,20 @@ flatten Zipf-host compute skew without a pre-pass action.
 
 from __future__ import annotations
 
+import os
 import statistics
 
 import pytest
 
 from pyspark.sql import functions as F
 
-from pdf_extractor_spark.pipeline import extract_documents
+from pdf_extractor_spark.pipeline import (
+    extract_documents,
+    read_latest,
+    run_extraction_job,
+)
 from pdf_extractor_spark.plans.partitioning import heavy_hosts
+from pdf_extractor_spark.sources import catalog
 
 
 @pytest.fixture(scope="module")
@@ -34,6 +40,26 @@ def doc_parquet(spark, tmp_path_factory):
         "overwrite"
     ).parquet(path)
     return path
+
+
+@pytest.fixture(scope="module")
+def committed_table(spark, doc_parquet, tmp_path_factory):
+    """A table with one snapshot and its lineage, committed by the job."""
+    table = str(tmp_path_factory.mktemp("committed") / "out")
+    df = spark.read.parquet(doc_parquet).limit(200)
+    assert run_extraction_job(spark, df, table, n_partitions=4)["rows"] == 200
+    return table
+
+
+def _jobs_run(spark, group: str, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` launches."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _explain(df) -> str:
@@ -110,14 +136,43 @@ def test_building_extraction_frame_runs_no_job(spark, doc_parquet):
     """extract_documents is a pure plan: no heavy-host count or collect (or
     any other action) runs before the caller's write."""
     df = spark.read.parquet(doc_parquet)
-    sc = spark.sparkContext
-    group = "extract-documents-plan-only"
-    sc.setJobGroup(group, "building the extraction frame")
-    try:
+
+    def build():
         extract_documents(df, n_partitions=8)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    assert _jobs_run(spark, "extract-documents-plan-only", build) == []
+
+
+def test_reading_engine_written_tables_runs_no_job(spark, committed_table):
+    """The commit marker records the schema written, so reading a table the
+    engine committed opens no Parquet footer: no schema inference job."""
+    table = committed_table
+    lineage = os.path.join(table, "_lineage")
+    reads = {
+        "read-committed": lambda: catalog.read_committed(spark, table),
+        "read-committed-lineage": lambda: catalog.read_committed(spark, lineage),
+        "read-snapshot": lambda: catalog.read_snapshot(spark, table, 1),
+        "read-snapshot-lineage": lambda: catalog.read_snapshot(spark, lineage, 1),
+        "read-latest": lambda: read_latest(spark, table),
+    }
+    for group, read in reads.items():
+        assert _jobs_run(spark, group, read) == [], group
+    # the recorded schema is the one inference reads from the files
+    for path in (table, lineage):
+        inferred = spark.read.parquet(os.path.join(path, "snap_1")).schema
+        assert catalog.read_committed(spark, path).schema == inferred
+
+
+def test_resume_anti_join_reads_committed_urls_without_aggregate(
+    spark, doc_parquet, committed_table
+):
+    """A left-anti join ignores duplicate keys: the committed side needs no
+    distinct, whose partial and final aggregates and exchange ran over every
+    committed url on each resume."""
+    todo = catalog.remaining(spark, spark.read.parquet(doc_parquet), committed_table)
+    plan = _explain(todo)
+    assert "LeftAnti" in plan
+    assert "HashAggregate" not in plan
 
 
 def test_star_join_broadcasts_dims(spark):

@@ -1,10 +1,13 @@
-"""Lazy zip-cache invalidation in the Python workers.
+"""Once-per-worker set-up of the Python workers (``udfs.prepare_worker``).
 
 ``udfs.install_lazy_zip_invalidation`` stops every task from re-reading the
 central directory of each zip on ``sys.path`` (``pyspark.zip`` included);
 these tests pin that an unchanged archive is not re-read, that a zip
 rewritten in place or added with ``addPyFile`` is still seen, and that the
-engine's UDFs install the patch in a reused Spark worker.
+engine's UDFs install the patch in a reused Spark worker. They also pin
+that the engine's UDFs freeze the worker's heap, so the daemon's
+``gc.collect()`` after each task skips it, while cycles made by later tasks
+are still collected.
 """
 from __future__ import annotations
 
@@ -167,3 +170,62 @@ def test_reused_spark_worker_is_patched_and_sees_added_zip(tmp_path):
     pid, _, before = out["first"]
     assert before is None
     assert out["second"] == [pid, lazy, 42]
+
+
+_FREEZE_PROBE = textwrap.dedent(
+    """
+    import gc, json, os, sys, weakref
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StringType
+    from pdf_extractor_spark.extract.udfs import make_extract_udf
+    from pdf_extractor_spark.session import build_session
+
+    class Node:
+        pass
+
+    def probe(_):
+        # report whether the cycles of earlier probes are gone, then make a
+        # new one that only a weak reference on a long-lived module keeps
+        refs = sys.__dict__.setdefault("_freeze_probe_refs", [])
+        alive = sum(r() is not None for r in refs)
+        a, b = Node(), Node()
+        a.peer, b.peer = b, a
+        refs.append(weakref.ref(a))
+        return json.dumps([os.getpid(), gc.get_freeze_count(), len(refs) - 1, alive])
+
+    spark = build_session(master="local[1]")
+    df = spark.createDataFrame(
+        [(b"<p>a paragraph long enough to be kept as content</p>",)],
+        "payload binary",
+    ).coalesce(1)
+    probe_udf = F.pandas_udf(lambda s: s.map(probe), StringType())
+    engine = df.select(make_extract_udf()("payload").alias("r")).collect()[0]
+    later = [json.loads(df.select(probe_udf("payload")).collect()[0][0])
+             for _ in range(2)]
+    print(json.dumps({"ok": engine.r.ok, "later": later}))
+    spark.stop()
+    """
+)
+
+
+def test_reused_spark_worker_heap_is_frozen_and_later_cycles_collected():
+    """One local[1] session: after an engine task the worker's heap is
+    frozen; a reference cycle made in a later task on the same worker is
+    collected by the time the next task runs."""
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (str(REPO), env.get("PYTHONPATH")) if p
+    )
+    env.setdefault("SPARK_DRIVER_MEM", "1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", _FREEZE_PROBE],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["ok"] is True
+    (pid, frozen, earlier, _), (pid2, _, earlier2, alive) = out["later"]
+    assert pid2 == pid
+    assert frozen > 0
+    assert (earlier, earlier2) == (0, 1)
+    assert alive == 0  # the cycle made in the earlier task was collected
