@@ -10,8 +10,11 @@ Replaces the reference CLI (reference main.py:160-904 ``extract``/``batch``):
         [--curate [--rates '{"en": 0.5}']] \
         [--refresh [--near-dup-threshold 0.5]]
 
-``--synth N`` generates the deterministic fixture corpus in-flight instead of
-reading an input table (for smoke runs and benchmarks; FIXTURES.md §1).
+``--curate``, ``--refresh`` and ``--repair`` are mutually exclusive modes, and
+a mode's sub-flag (``--rates``, ``--band-index``) without its mode is an
+error. ``--synth N`` generates the deterministic fixture corpus in-flight
+instead of reading an input table (for smoke runs and benchmarks;
+FIXTURES.md §1).
 ``--repair ROUNDS`` runs the V7 repair loop over committed ok=false rows
 (reference main.py:321-337) instead of a fresh pass; the M4 context flags
 override the boilerplate classifier thresholds for the run.
@@ -20,6 +23,7 @@ override the boilerplate classifier thresholds for the run.
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
 import os
 import sys
@@ -33,16 +37,23 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--no-resume", action="store_true", help="reprocess everything")
     ap.add_argument("--synth", type=int, default=None, help="synthesize N fixture docs as input")
     ap.add_argument("--master", default=None, help="spark master (default: local[$SPARK_GRAFT_CPUS])")
-    ap.add_argument(
+    mode = ap.add_mutually_exclusive_group()
+    mode.add_argument(
         "--repair", type=int, default=None, metavar="ROUNDS",
         help="repair mode (V7): re-extract committed ok=false rows for up to "
         "ROUNDS rounds instead of running a fresh extraction pass",
     )
-    ap.add_argument(
+    mode.add_argument(
         "--refresh", action="store_true",
         help="incremental refresh mode: exact resume -> extract -> "
         "near-dup probe of the committed corpus -> commit survivors "
         "(continuous corpus maintenance; cost scales with the batch)",
+    )
+    mode.add_argument(
+        "--curate", action="store_true",
+        help="curation mode: gopher filter -> exact-dup keep-first -> "
+        "deterministic sampling -> partitioned corpus write (input must "
+        "be documents-shaped: doc_id, text, lang)",
     )
     ap.add_argument(
         "--near-dup-threshold", type=float, default=0.5,
@@ -55,12 +66,6 @@ def main(argv: list[str] | None = None) -> int:
         "bucketed table under <output>/_band_index — probed shuffle-free "
         "on the corpus side and appended per committed batch, instead of "
         "recomputing corpus signatures inline every refresh",
-    )
-    ap.add_argument(
-        "--curate", action="store_true",
-        help="curation mode: gopher filter -> exact-dup keep-first -> "
-        "deterministic sampling -> partitioned corpus write (input must "
-        "be documents-shaped: doc_id, text, lang)",
     )
     ap.add_argument(
         "--rates", default=None, metavar="JSON",
@@ -78,27 +83,22 @@ def main(argv: list[str] | None = None) -> int:
 
     if not args.input and not args.synth:
         ap.error("one of --input or --synth is required")
+    if args.band_index and not args.refresh:
+        ap.error("--band-index requires --refresh")
+    if args.rates is not None and not args.curate:
+        ap.error("--rates requires --curate")
 
+    from pdf_extractor_spark.extract.udfs import ExtractContext
     from pdf_extractor_spark.session import build_session
     from pdf_extractor_spark.pipeline import rerun_failed, run_extraction_job
 
-    context = None
-    if args.min_content_chars is not None or args.max_link_density is not None:
-        from pdf_extractor_spark.extract.udfs import ExtractContext
-
-        defaults = ExtractContext()
-        context = ExtractContext(
-            min_content_chars=(
-                args.min_content_chars
-                if args.min_content_chars is not None
-                else defaults.min_content_chars
-            ),
-            max_link_density=(
-                args.max_link_density
-                if args.max_link_density is not None
-                else defaults.max_link_density
-            ),
-        )
+    overrides = {
+        "min_content_chars": args.min_content_chars,
+        "max_link_density": args.max_link_density,
+    }
+    context = dataclasses.replace(
+        ExtractContext(), **{k: v for k, v in overrides.items() if v is not None}
+    )
 
     spark = build_session(app_name="extract-job", master=args.master)
     try:

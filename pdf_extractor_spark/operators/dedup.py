@@ -74,43 +74,6 @@ def word_shingles(col: Column, n: int = 3) -> Column:
     return shingles_from_tokens(word_tokens(col), n)
 
 
-def minhash_signature(col: Column, k: int = DEFAULT_MINHASH_K, shingle_n: int = 3) -> Column:
-    """k min-hashes; permutation i = md5('<i>:' + shingle) (string min).
-
-    md5-as-string minimum is a valid exchangeable hash family and is
-    reproducible in any engine with md5().
-    """
-    sh = word_shingles(col, shingle_n)
-
-    def _one(seed: int) -> Column:
-        prefix = f"{seed}:"
-        # NOTE: the lambda must take exactly one arg — a two-arg lambda makes
-        # F.transform pass the element INDEX as the second argument.
-        return F.array_min(
-            F.transform(sh, lambda s: F.md5(F.concat(F.lit(prefix), s)))
-        )
-
-    return F.array(*[_one(i) for i in range(k)])
-
-
-def minhash_bands(col: Column, k: int = DEFAULT_MINHASH_K, bands: int = DEFAULT_BANDS,
-                  shingle_n: int = 3) -> Column:
-    """LSH band keys: md5 of each band's concatenated signature rows."""
-    sig = minhash_signature(col, k, shingle_n)
-    rows_per_band = k // bands
-    return F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[F.element_at(sig, b * rows_per_band + r + 1) for r in range(rows_per_band)],
-                )
-            )
-            for b in range(bands)
-        ]
-    )
-
-
 def with_minhash_bands(
     df: DataFrame,
     id_col: str = "doc_id",

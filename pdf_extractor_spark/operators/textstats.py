@@ -410,21 +410,6 @@ def trigram_typicality_df(
     )
 
 
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full stat bundle to a documents DataFrame."""
-    c = F.col(text_col)
-    feats = quality_features(c)
-    out = df
-    for name, expr in feats.items():
-        out = out.withColumn(name, expr)
-    return (
-        out.withColumn("n_tokens_bpe", bpe_token_count(c))
-        .withColumn("lang_pred", language_id(c))
-        .withColumn("quality", quality_score(c))
-        .withColumn("fingerprint", content_fingerprint(c))
-    )
-
-
 def gopher_keep_expr() -> "Column":
     """Gopher-style composite keep decision over the repetition_stats
     columns (n_tokens, distinct_token_frac, top_token_frac,

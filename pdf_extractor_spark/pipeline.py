@@ -14,8 +14,7 @@ Physical shape: one explicit Exchange, one ArrowEvalPython, everything else
 whole-stage codegen. Per-doc failures are ``ok=false`` rows, never task
 failures (reference main.py:852-854 continue-on-error).
 
-Every job path (fresh/resumed run, streaming micro-batch, repair round,
-refresh) commits through ``_commit_with_lineage``: the snapshot write is
+Every job path (fresh/resumed run, repair round, refresh) commits through ``_commit_with_lineage``: the snapshot write is
 the one action over the extracted frame, its counts are observed on that
 write, and lineage is read back from the written files — so each doc is
 extracted exactly once and no extracted text is cached.

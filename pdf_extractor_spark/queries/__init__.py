@@ -6,403 +6,43 @@ exactly (the driver hashes values after sorting columns by name). Float
 outputs are rounded identically on both sides. All hashes in checked results
 are md5-hex-string based so DuckDB reproduces them bit-for-bit.
 
-Round-5 layout: one module per query family (split verbatim from the
-original single-file catalog; registration order unchanged), shared
-@query registry in _registry. Every top-level name of the old module is
-re-exported here, so `from pdf_extractor_spark.queries import X` keeps
-working for all X.
+One module per query family, sharing the @query registry in _registry.
+Importing a family registers its queries, so the import order below IS the
+catalog order: append new families, never insert. A family's helpers are
+imported from its own module.
 """
 
 from __future__ import annotations
 
-from pdf_extractor_spark.queries._registry import (
-    annotations,
-    Callable,
-    Column,
-    DataFrame,
-    F,
-    SparkSession,
-    Window,
-    N,
-    D,
-    M,
-    S,
-    T,
-    QueryFn,
-    _QUERIES,
-    _ORACLES,
-    _t,
-    _par,
-    query,
+from pdf_extractor_spark.queries import (  # noqa: F401  (registration)
+    q01_relational,
+    q02_scalar_normalize,
+    q03_textstats,
+    q04_dedup,
+    q05_events,
+    q06_embeddings,
+    q07_extraction_multimodal,
+    q08_graph_mixture,
+    q09_variant_shapes,
+    q10_round3_ops,
+    q11_retrieval_phash,
+    q12_quality_sketches,
+    q13_harvest_urlstats,
+    q14_pass7_wat_justext,
+    q15_pass8_graph_dpo,
+    q16_pass9_crawl_kcore,
+    q17_pass10_markdown_quant,
+    q18_pass11_unicode_topic,
+    q19_pass12_content_gates,
+    q20_pass13_mixture_eval,
+    q21_hygiene_phrase,
+    q22_softdedup_tuning,
+    q23_round5,
+)
+from pdf_extractor_spark.queries._registry import (  # noqa: F401
     _DRIVER_WINDOW,
-    _window_order,
-    all_queries,
+    _ORACLES,
+    _QUERIES,
     all_oracles,
-    _dotted_rank,
-)
-from pdf_extractor_spark.queries.q01_relational import (
-    q1,
-    q3,
-    q5,
-    w1,
-    w2,
-    j_anti,
-    j_semi,
-    a3,
-    a5,
-    a2,
-    a6,
-    a10,
-    a11,
-    w4,
-)
-from pdf_extractor_spark.queries.q02_scalar_normalize import (
-    f1,
-    f2,
-    _dirty_col,
-    f3,
-    f5,
-    f6,
-    f8,
-    f9,
-    f11,
-)
-from pdf_extractor_spark.queries.q03_textstats import (
-    t_tokens,
-    t_quality,
-    t_langid,
-    t_fp,
-    _NIB,
-    _H16_SQL,
-    t_winnow,
-)
-from pdf_extractor_spark.queries.q04_dedup import (
-    d_winnow_pairs,
-    d_exact,
-    _TOK_SQL,
-    _TOK_SQL_SAFE,
-    _HEX8,
-    _SHINGLE_SQL,
-    t_repetition,
-    t_gopher,
-    t_clean,
-    w_meta,
-    _messy_url_col,
-    _MESSY_URL_SQL,
-    t_features,
-    u_hosts,
-    d_minhash,
-    _LSH_PAIRS_SQL,
-    d_lsh,
-    d_components,
-    d_jaccard,
-    _JACCARD_CASE,
-    d_verified,
-    t_redact,
-    u_canon,
-    _SHINGLE5_SQL,
-    DECONTAM_DF_MAX,
-    d_decontam,
-    d_joint,
-    d_simhash,
-    t_tfidf,
-    d_cluster_reps,
-    _H48_SQL,
-    d_simhash_pairs,
-    _LSH_CAPPED_SQL,
-    d_lsh_capped,
-    f10,
-)
-from pdf_extractor_spark.queries.q05_events import (
-    s_tumbling,
-    s_sessionize,
-    a_rollup,
-    t_quantiles,
-    v_statement,
-    v_validate,
-    t_sample,
-    t_qsample,
-    t_strat,
-    a_kmv,
-    j_asof,
-    j_interval,
-)
-from pdf_extractor_spark.queries.q06_embeddings import (
-    _query_vec,
-    e_topk,
-    e_centroid,
-    e_srp,
-    e_near_dup,
-    e_ivf,
-    _SRP_PLANES_SQL,
-    e_multiprobe,
-    e_ivf2,
-    e_kmeans,
-    m3,
-    m_chunk,
-    x_curation,
-    m_pack,
-    p6,
-    a1,
-)
-from pdf_extractor_spark.queries.q07_extraction_multimodal import (
-    _PAGE_PREFIX,
-    _PAGE_SUFFIX,
-    mm_features,
-    mm_audio,
-    mm_frames,
-    synthesize_page,
-    x_extract,
-    x_spans,
-    _PDF_CHARS_PER_LINE,
-    _PDF_LINES_PER_PAGE,
-    x_extract_pdf,
-    _SEG3_SQL,
-    t_line_boiler,
-    d_para_dedup,
-    t_trigram_typicality,
-    t_target_mix,
-    u_host_cap,
-    _sig_sql,
-    d_incremental,
-    u_recrawl,
-    _BLOOM_POS_SQL,
-    u_bloom,
-    _C4_LINES_SQL,
-    t_c4,
-    t_dsir,
-    d_semdedup_q,
-    w_warc_codec,
-    u_robots,
-    _pr_iter_sql,
-    g_pagerank,
-    t_ccnet,
-    d_para_rewrite,
-    t_tmix,
-    _bpe_round_sql,
-    m_bpe,
-    t_qclf,
-    m_bpe_encode,
-    d_exact_substr,
-    d_exact_substr_rw,
-    s_first_event,
-    w_cdx,
-)
-from pdf_extractor_spark.queries.q08_graph_mixture import (
-    _PAGE_HTML_SQL,
-    _page_html_col,
-    _DST_HOST_SQL,
-    _dst_host_col,
-    u_outlinks,
-    u_anchor_terms,
-    d_leakage_split,
-    m_mixture,
-    f20_format,
-)
-from pdf_extractor_spark.queries.q09_variant_shapes import (
-    _P4_JSON_SQL,
-    _p4_json_col,
-    p4_multi_detect,
-    _F18_JSON_SQL,
-    _f18_json_col,
-    f18_drift,
-    _F19_CFG_SQL,
-    f19_split,
-    _F21_REPORT_SQL,
-    f21_parse,
-)
-from pdf_extractor_spark.queries.q10_round3_ops import (
-    e_hard_neg,
-    m_ngrams,
-    _MOJIBAKE_FIXES,
-    _MOJIBAKE_DIRT,
-    _sql_chr_concat,
-    _MOJIBAKE_DIRT_SQL,
-    _MOJIBAKE_FIX_SQL,
-    _bad,
-    _good,
-    t_mojibake,
-    _global_rank_desc,
-    t_rrf,
-    u_fetch_sched,
-    e_div_sample,
-    w_sitemap,
-    u_budget,
-    _SEG20_SQL,
-    _SEG_LANGID_SQL,
-    t_para_langid,
-    u_resolve,
-    x_tables,
-)
-from pdf_extractor_spark.queries.q11_retrieval_phash import (
-    _BM25_QUERIES,
-    _BM25_K,
-    _bm25_oracle,
-    t_bm25,
-    _PHASH_PAYLOAD_SQL,
-    _H60_PHASH_SQL,
-    mm_phash_pairs,
-    t_simpson_diversity,
-    d_boilerplate_paragraphs,
-    d_drop_boilerplate,
-)
-from pdf_extractor_spark.queries.q12_quality_sketches import (
-    _PTRON_X,
-    _PTRON_W,
-    _PTRON_MARGIN,
-    _ptron_epoch_sql,
-    _PTRON_FEATS_SQL,
-    t_quality_train,
-    t_compression_ratio,
-    e_bitext_mine,
-    t_readability,
-    m_span_corruption,
-    _pq_sub_sql,
-    e_pq_encode,
-    m_curriculum_order,
-    e_adc_topk,
-    a_hll_distinct,
-    m_fim_transform,
-    _CMS_B,
-    a_cms_heavy_hitters,
-    w_wet_codec,
-    m_tokenizer_fertility,
-    _global_rank_asc,
-    a_range_bounds,
-    _z16_sql,
-    a_zorder_key,
-    _hits_iter_sql,
-    g_host_hits,
-    x_extract_outline,
-    d_cdc_chunks,
-    _PLD_HOST_SQL,
-    u_pld_rollup,
-    e_ann_recall,
-    _mmr_round_sql,
-    e_mmr_rerank,
-    _SPAM_URL_SQL,
-)
-from pdf_extractor_spark.queries.q13_harvest_urlstats import (
-    u_url_spam_filter,
-    t_sentence_split,
-    a_shard_manifest,
-    m_packing_efficiency,
-    d_lsh_recall,
-    _LDJSON_PAGE_SQL,
-    x_extract_jsonld,
-    _CODE_PAGE_SQL,
-    x_extract_code_blocks,
-    a_quantile_histogram,
-    t_zipf_slope,
-    u_frontier_priority,
-    e_kmeans_cohesion,
-    _HREFLANG_PAGE_SQL,
-    u_hreflang_cluster,
-    _RSS_FEED_SQL,
-    w_rss_items,
-    m_dataset_card_stats,
-    _REDIR_STEP_SQL,
-    u_redirect_resolve,
-    e_embedding_norm_outliers,
-    m_epoch_shuffle,
-)
-from pdf_extractor_spark.queries.q14_pass7_wat_justext import (
-    _HTTP_CT_RE,
-    _HTTP_CS_RE,
-    _HTTP_ST_RE,
-    w_wat_codec,
-    u_mime_filter,
-    _SEG5_SAFE_SQL,
-    t_justext_blocks_q,
-    m_sft_format,
-    e_knn_graph,
-)
-from pdf_extractor_spark.queries.q15_pass8_graph_dpo import (
-    g_triangle_count,
-    _lp_iter_sql,
-    g_label_propagation,
-    m_dpo_pairs,
-    m_length_bucket_batches,
-    _OG_TITLE_RE,
-    _OG_LOCALE_RE,
-    _CANONICAL_RE,
-    _META_DESC_RE,
-    _TITLE_TAG_RE,
-    x_extract_og_meta,
-    t_trigram_novelty,
-)
-from pdf_extractor_spark.queries.q16_pass9_crawl_kcore import (
-    u_crawl_trap,
-    u_link_reciprocity,
-    d_host_template_mass,
-    _kcore_iter_sql,
-    g_kcore,
-    u_sitemap_gap,
-)
-from pdf_extractor_spark.queries.q17_pass10_markdown_quant import (
-    x_table_markdown,
-    m_sentence_windows,
-    e_int8_quant,
-    t_oov_rate,
-    m_anneal_mix,
-)
-from pdf_extractor_spark.queries.q18_pass11_unicode_topic import (
-    _DIRTY_SQL,
-    t_unicode_clean,
-    _TOPIC_LEX,
-    _topic_marker_sql,
-    _topic_list_sql,
-    _TOPIC_SCORES,
-    t_topic_classify,
-    _CHARSET_HEX_RE,
-    _sniff_body_sql,
-    w_charset_sniff,
-    _CANON_URL_SQL,
-    _CANON_HEAD_SQL,
-    u_canonical_cluster,
-    d_containment_pairs,
-)
-from pdf_extractor_spark.queries.q19_pass12_content_gates import (
-    _SCRIPTS,
-    _SCRIPT_BEST,
-    _script_body_sql,
-    t_script_detect,
-    _BADWORDS,
-    _BAD_LIST_SQL,
-    _badword_marker_sql,
-    t_badwords_gate,
-    _pii_marker_sql,
-    t_pii_density_gate,
-)
-from pdf_extractor_spark.queries.q20_pass13_mixture_eval import (
-    _DOREMI_T,
-    _DOREMI_ETA_PPM,
-    _doremi_rounds_sql,
-    m_doremi_weights,
-    m_temporal_split,
-    e_dim_truncation,
-    t_unigram_kl,
-)
-from pdf_extractor_spark.queries.q21_hygiene_phrase import (
-    _WRAP_SQL,
-    _DEHYPH_SQL,
-    x_dehyphenate,
-    _LIG_INJECT_STEPS,
-    _LIG_FOLD_STEPS,
-    _sql_replace_chain,
-    t_ligature_fold,
-    _LIST_PAGE_SQL,
-    x_list_markdown,
-    t_phrase_search,
-)
-from pdf_extractor_spark.queries.q22_softdedup_tuning import (
-    d_soft_dedup_weights,
-    _POIS1_THRESHOLDS,
-    _POIS_CASE_SQL,
-    a_bootstrap_ci,
-    d_minhash_band_tuning,
-)
-from pdf_extractor_spark.queries.q23_round5 import (
-    a_protocol_canary,
-    mm_phash_dedup_reps,
+    all_queries,
 )

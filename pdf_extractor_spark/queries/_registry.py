@@ -8,8 +8,8 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-# Column/D/M/S/T are not used by the registry itself; they are re-exported
-# via the package __init__ to preserve the former single-module namespace.
+# Column/D/M/S/T are not used by the registry itself; the family modules
+# import them from here, together with _t and _par.
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from pdf_extractor_spark.functions import normalize as N

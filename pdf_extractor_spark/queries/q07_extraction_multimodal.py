@@ -14,22 +14,11 @@ from pdf_extractor_spark.queries._registry import (
     S,
     SparkSession,
     T,
+    _par,
+    _t,
     query,
 )
 
-import pdf_extractor_spark.queries as _q_pkg
-
-
-def _t(spark, sf_dir, name):
-    """Late-bound delegator: resolves the package-level _t at call
-    time (the single-file catalog resolved it via module globals, and
-    tests monkeypatch pdf_extractor_spark.queries._t)."""
-    return _q_pkg._t(spark, sf_dir, name)
-
-
-def _par(spark):
-    """Late-bound delegator to the package-level _par (see _t)."""
-    return _q_pkg._par(spark)
 from pdf_extractor_spark.queries.q04_dedup import (
     _HEX8,
     _JACCARD_CASE,
@@ -1645,8 +1634,8 @@ def d_exact_substr_rw(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def s_first_event(spark: SparkSession, sf: str) -> DataFrame:
-    """First event per (user, type) — the batch twin of the streaming
-    dedup operator (streaming/dedup.py dedup_stream): one groupBy with a
+    """First event per (user, type) — the batch twin of streaming
+    watermark dedup: one groupBy with a
     struct-min over (ts, event_id, value), the deterministic tie rule
     (min_by tie order is undefined; the struct minimum is total). The
     streaming equivalence — dropDuplicatesWithinWatermark keeping the

@@ -12,22 +12,11 @@ from pdf_extractor_spark.queries._registry import (
     F,
     S,
     SparkSession,
+    _par,
+    _t,
     query,
 )
 
-import pdf_extractor_spark.queries as _q_pkg
-
-
-def _t(spark, sf_dir, name):
-    """Late-bound delegator: resolves the package-level _t at call
-    time (the single-file catalog resolved it via module globals, and
-    tests monkeypatch pdf_extractor_spark.queries._t)."""
-    return _q_pkg._t(spark, sf_dir, name)
-
-
-def _par(spark):
-    """Late-bound delegator to the package-level _par (see _t)."""
-    return _q_pkg._par(spark)
 from pdf_extractor_spark.queries.q04_dedup import (
     _TOK_SQL_SAFE,
 )

@@ -11,17 +11,10 @@ from pdf_extractor_spark.queries._registry import (
     DataFrame,
     F,
     SparkSession,
+    _t,
     query,
 )
 
-import pdf_extractor_spark.queries as _q_pkg
-
-
-def _t(spark, sf_dir, name):
-    """Late-bound delegator: resolves the package-level _t at call
-    time (the single-file catalog resolved it via module globals, and
-    tests monkeypatch pdf_extractor_spark.queries._t)."""
-    return _q_pkg._t(spark, sf_dir, name)
 from pdf_extractor_spark.queries.q04_dedup import (
     _HEX8,
 )

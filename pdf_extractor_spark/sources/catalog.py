@@ -115,14 +115,7 @@ def next_snapshot_id(table_path: str) -> int:
     return (max(existing) + 1) if existing else 1
 
 
-def commit_snapshot(
-    df: DataFrame,
-    table_path: str,
-    snapshot_id: int | None = None,
-    *,
-    preserve_snapshot: bool = False,
-    replace_live: bool = False,
-) -> int:
+def commit_snapshot(df: DataFrame, table_path: str, *, rewrite: bool = False) -> int:
     """Write ``df`` as a new snapshot; the commit marker is written, then
     the _live manifest is swapped — visibility flips on that single atomic
     rename (a crash in between leaves the new snapshot invisible and the
@@ -130,18 +123,18 @@ def commit_snapshot(
 
     Every committed row carries a ``_snapshot`` column written at commit
     time (the Iceberg snapshot-id analog) so last-wins merge ordering is a
-    table property, not a directory-name convention.
-    ``preserve_snapshot`` keeps each row's EXISTING ``_snapshot`` value
-    (compaction/delete rewrite history files but must not flatten the
-    last-wins order — re-stamping made read_latest return repaired-over
-    rows again). ``replace_live`` makes this snapshot the ONLY live one
-    (the delete/compact swap). The marker records the schema written, so
-    reads of the snapshot infer nothing."""
+    table property, not a directory-name convention. A ``rewrite`` commit
+    (compaction, deletes) replaces the whole table: the new
+    snapshot becomes the ONLY live one, and each row keeps its EXISTING
+    ``_snapshot`` value (rewriting history must not flatten the last-wins
+    order — re-stamping made read_latest return repaired-over rows again).
+    The marker records the schema written, so reads of the snapshot infer
+    nothing."""
     os.makedirs(table_path, exist_ok=True)
     prior = _committed_ids(table_path)
-    n = next_snapshot_id(table_path) if snapshot_id is None else snapshot_id
+    n = next_snapshot_id(table_path)
     snap_dir = os.path.join(table_path, f"snap_{n}")
-    if preserve_snapshot and "_snapshot" in df.columns:
+    if rewrite and "_snapshot" in df.columns:
         df = df.withColumn(
             "_snapshot", F.coalesce(F.col("_snapshot"), F.lit(n))
         )
@@ -151,7 +144,7 @@ def commit_snapshot(
     df.write.mode("overwrite").parquet(snap_dir)
     with open(os.path.join(table_path, _MARKER.format(n=n)), "w") as fh:
         json.dump(record, fh)
-    _write_live(table_path, [n] if replace_live else prior + [n])
+    _write_live(table_path, [n] if rewrite else prior + [n])
     return n
 
 
@@ -227,46 +220,45 @@ def list_snapshots(spark: SparkSession, table_path: str) -> DataFrame:
     )
 
 
-def delete_where(
-    spark: SparkSession, table_path: str, keys: DataFrame, key: str = "url"
+def _rewrite(
+    spark: SparkSession,
+    table_path: str,
+    keys: DataFrame | None = None,
+    key: str = "url",
 ) -> int:
-    """S5 — delete rows by key (reference src/pdf_uploader.py:100-118
-    delete_file; Iceberg ``DELETE FROM`` analog): rewrite the table as one
-    consolidated snapshot minus the keys, commit it, then drop the old
+    """Rewrite the table as one consolidated snapshot, minus the rows
+    whose ``key`` is in ``keys`` when given; commit it, then drop the old
     snapshots' markers (old data dirs become invisible orphans, mirroring
-    Iceberg's snapshot expiry)."""
+    Iceberg's snapshot expiry). Returns the new snapshot id, 0 when the
+    table is empty."""
     current = read_committed(spark, table_path)
     if current is None:
         return 0
     old_ids = _committed_ids(table_path)
-    kept = current.join(keys.select(key), on=key, how="left_anti")
-    # preserve per-row _snapshot (last-wins history) and swap the _live
-    # manifest in one rename; marker removal below is mere housekeeping
-    n = commit_snapshot(
-        kept, table_path, preserve_snapshot=True, replace_live=True
-    )
+    if keys is not None:
+        current = current.join(keys.select(key), on=key, how="left_anti")
+    # the _live swap inside the commit is what readers see; marker removal
+    # below is mere housekeeping
+    n = commit_snapshot(current, table_path, rewrite=True)
     for old in old_ids:
         marker = os.path.join(table_path, _MARKER.format(n=old))
         if os.path.exists(marker):
             os.remove(marker)
     return n
+
+
+def delete_where(
+    spark: SparkSession, table_path: str, keys: DataFrame, key: str = "url"
+) -> int:
+    """S5 — delete rows by key (reference src/pdf_uploader.py:100-118
+    delete_file; Iceberg ``DELETE FROM`` analog)."""
+    return _rewrite(spark, table_path, keys, key)
 
 
 def compact(spark: SparkSession, table_path: str) -> int:
     """Consolidate all committed snapshots into one (snapshot-expiry
     housekeeping; keeps the resume anti-join cheap as commits accumulate)."""
-    current = read_committed(spark, table_path)
-    if current is None:
-        return 0
-    old_ids = _committed_ids(table_path)
-    n = commit_snapshot(
-        current, table_path, preserve_snapshot=True, replace_live=True
-    )
-    for old in old_ids:
-        marker = os.path.join(table_path, _MARKER.format(n=old))
-        if os.path.exists(marker):
-            os.remove(marker)
-    return n
+    return _rewrite(spark, table_path)
 
 
 def remaining(

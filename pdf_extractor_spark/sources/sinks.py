@@ -140,27 +140,6 @@ def curate_corpus(
     return kept
 
 
-def curate_and_save(
-    df: DataFrame,
-    path: str,
-    rates: dict[str, float] | None = None,
-    default_rate: float = 1.0,
-    partition_cols: tuple[str, ...] = ("lang",),
-    max_records_per_file: int = 500_000,
-    **curate_kwargs,
-) -> None:
-    """Curated-corpus sink path: sampling composition -> partitioned write."""
-    kept = curate_corpus(
-        df, rates=rates, default_rate=default_rate, **curate_kwargs
-    )
-    save_curated_corpus(
-        kept,
-        path,
-        partition_cols=partition_cols,
-        max_records_per_file=max_records_per_file,
-    )
-
-
 def save_curated_corpus(
     df: DataFrame,
     path: str,

@@ -17,7 +17,6 @@ from pdf_extractor_spark.extract.html_parser import DEFAULT_CONTEXT
 from pdf_extractor_spark.extract.udfs import EXTRACT_RESULT_SCHEMA, extract_one
 from pdf_extractor_spark.fixtures.synth import make_document_row
 from pdf_extractor_spark.sources import catalog
-from pdf_extractor_spark.streaming.incremental import stream_extract_to_catalog
 
 SCHEMA = "url string, warc_ts timestamp, html binary, lang string"
 N_DOCS = 40
@@ -55,12 +54,12 @@ def extracted_rows(spark, monkeypatch):
     return acc
 
 
-def _fresh(spark, table, tmp_path):
+def _fresh(spark, table, tmp_path, foreach_batch):
     df = spark.createDataFrame(_rows(range(N_DOCS)), SCHEMA)
     return lambda: pipeline.run_extraction_job(spark, df, table, n_partitions=4)
 
 
-def _resumed(spark, table, tmp_path):
+def _resumed(spark, table, tmp_path, foreach_batch):
     pipeline.run_extraction_job(
         spark, spark.createDataFrame(_rows(range(N_DOCS // 2)), SCHEMA), table, n_partitions=4
     )
@@ -68,14 +67,14 @@ def _resumed(spark, table, tmp_path):
     return lambda: pipeline.run_extraction_job(spark, df, table, n_partitions=4)
 
 
-def _repair(spark, table, tmp_path):
+def _repair(spark, table, tmp_path, foreach_batch):
     broken = _rows(range(N_DOCS), empty=set(range(0, N_DOCS, 5)))
     pipeline.run_extraction_job(spark, spark.createDataFrame(broken, SCHEMA), table, n_partitions=4)
     df = spark.createDataFrame(_rows(range(N_DOCS)), SCHEMA)
     return lambda: pipeline.rerun_failed(spark, df, table, n_partitions=4)
 
 
-def _refresh(spark, table, tmp_path):
+def _refresh(spark, table, tmp_path, foreach_batch):
     pipeline.run_extraction_job(
         spark, spark.createDataFrame(_rows(range(N_DOCS // 2)), SCHEMA), table, n_partitions=4
     )
@@ -89,14 +88,13 @@ def _refresh(spark, table, tmp_path):
     return lambda: pipeline.run_refresh_job(spark, df, table, n_partitions=4)
 
 
-def _stream(spark, table, tmp_path):
+def _stream(spark, table, tmp_path, foreach_batch):
     src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
     spark.createDataFrame(_rows(range(N_DOCS)), SCHEMA).write.parquet(src)
 
     def run():
         for _ in range(2):  # the second pass replays every epoch
-            q = stream_extract_to_catalog(spark, src, SCHEMA, table, ckpt, n_partitions=4)
-            q.start().awaitTermination(180)
+            foreach_batch(src, SCHEMA, table, ckpt, pipeline.run_extraction_job, n_partitions=4)
             shutil.rmtree(ckpt)
 
     return run
@@ -107,9 +105,11 @@ def _stream(spark, table, tmp_path):
     [_fresh, _resumed, _repair, _refresh, _stream],
     ids=["fresh", "resumed", "rerun_failed", "refresh", "stream"],
 )
-def test_one_extraction_per_committed_doc(spark, tmp_path, extracted_rows, setup):
+def test_one_extraction_per_committed_doc(
+    spark, tmp_path, extracted_rows, foreach_batch, setup
+):
     table = str(tmp_path / "table")
-    job = setup(spark, table, tmp_path)
+    job = setup(spark, table, tmp_path, foreach_batch)
 
     def committed():
         done = catalog.read_committed(spark, table)

@@ -63,6 +63,14 @@ def test_fingerprint_normalizes(spark):
 # --- dedup -------------------------------------------------------------------
 
 
+def _sf_dir(tmp_path, **tables) -> str:
+    """Write each frame as ``<tmp_path>/<table>.parquet``, the layout a
+    query reads its ``sf_dir`` tables from; returns that directory."""
+    for name, df in tables.items():
+        df.write.parquet(str(tmp_path / f"{name}.parquet"))
+    return str(tmp_path)
+
+
 def _docs(spark):
     rows = [
         (1, "the quick brown fox jumps over the lazy dog", "a"),
@@ -1431,7 +1439,7 @@ def test_global_rank_desc_matches_unpartitioned_window(spark):
 
     from pyspark.sql import Window, functions as F
 
-    from pdf_extractor_spark.queries import _global_rank_desc
+    from pdf_extractor_spark.queries.q10_round3_ops import _global_rank_desc
 
     for seed, scale in [(1, 100.0), (2, 1.0), (3, 0.0)]:
         rng = random.Random(seed)
@@ -1639,7 +1647,7 @@ def test_hll_duplicate_insensitive(spark):
 # --- fill-in-the-middle --------------------------------------------------------
 
 
-def test_fim_transform_accounting_and_bytes(spark):
+def test_fim_transform_accounting_and_bytes(spark, tmp_path):
     """Span lengths must sum to the document length, and the PSM bytes
     must equal a serial Python replay of the same md5 cut-point rule."""
     import hashlib
@@ -1654,16 +1662,9 @@ def test_fim_transform_accounting_and_bytes(spark):
         (7, "unicode snowman ☃ and accents éè", "en"),
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string, lang string")
-    df.createOrReplaceTempView("_fim_docs")
-    # drive the registered query body against this frame via its callable
-    import pdf_extractor_spark.queries as Q
-
-    orig_t = Q._t
-    try:
-        Q._t = lambda spark_, sf_, name_: df
-        out = {r["doc_id"]: r for r in Q._QUERIES["m_fim_transform"](spark, "x").collect()}
-    finally:
-        Q._t = orig_t
+    # drive the registered query body against this frame as its table
+    sf_dir = _sf_dir(tmp_path, documents=df)
+    out = {r["doc_id"]: r for r in _QUERIES["m_fim_transform"](spark, sf_dir).collect()}
 
     def frac(salt, i):
         return int(hashlib.md5(f"{salt}:{i}".encode()).hexdigest()[:8], 16) / 16**8
@@ -1725,7 +1726,7 @@ def test_global_rank_asc_matches_unpartitioned_window(spark):
 
     from pyspark.sql import Window, functions as F
 
-    from pdf_extractor_spark.queries import _global_rank_asc
+    from pdf_extractor_spark.queries.q12_quality_sketches import _global_rank_asc
 
     for seed, scale in [(1, 100.0), (2, 1.0), (3, 0.0)]:
         rng = random.Random(seed)
@@ -1750,23 +1751,19 @@ def test_global_rank_asc_matches_unpartitioned_window(spark):
         assert got == ref, f"seed={seed}"
 
 
-def test_range_bounds_are_balanced(spark):
+def test_range_bounds_are_balanced(spark, tmp_path):
     """Every boundary's rows_below must equal floor(i*N/8) and boundary
     values must be non-decreasing — the equal-frequency property a range
     partitioner needs."""
-    import pdf_extractor_spark.queries as Q
+    from pdf_extractor_spark.queries import _QUERIES
 
     rows = [(i, "x" * ((i * 37) % 400), "en") for i in range(160)]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    orig_t = Q._t
-    try:
-        Q._t = lambda s_, sf_, n_: df
-        got = sorted(
-            (r["bound_idx"], r["rows_below"], r["boundary_value"])
-            for r in Q._QUERIES["a_range_bounds"](spark, "x").collect()
-        )
-    finally:
-        Q._t = orig_t
+    sf_dir = _sf_dir(tmp_path, documents=df)
+    got = sorted(
+        (r["bound_idx"], r["rows_below"], r["boundary_value"])
+        for r in _QUERIES["a_range_bounds"](spark, sf_dir).collect()
+    )
     assert [b for b, _, _ in got] == list(range(1, 8))
     assert [n for _, n, _ in got] == [(i * 160) // 8 for i in range(1, 8)]
     vals = [v for _, _, v in got]
@@ -1777,7 +1774,7 @@ def test_zorder_interleave_matches_python_bits(spark):
     """The arithmetic interleave must equal Python's bit-twiddled Morton
     code, and locality must hold: adjacent a-values with equal b differ
     only in low interleaved bits."""
-    from pdf_extractor_spark.queries import _z16_sql
+    from pdf_extractor_spark.queries.q12_quality_sketches import _z16_sql
 
     import duckdb
 
@@ -1871,10 +1868,10 @@ def _cdc_serial(text: str):
     return out
 
 
-def test_cdc_chunks_match_serial_replay(spark):
+def test_cdc_chunks_match_serial_replay(spark, tmp_path):
     import random
 
-    import pdf_extractor_spark.queries as Q
+    from pdf_extractor_spark.queries import _QUERIES
 
     rng = random.Random(7)
     docs = [
@@ -1884,12 +1881,7 @@ def test_cdc_chunks_match_serial_replay(spark):
     docs.append((99, "short", "en"))
     docs.append((100, "", "en"))
     df = spark.createDataFrame(docs, "doc_id long, text string, lang string")
-    orig_t = Q._t
-    try:
-        Q._t = lambda s_, sf_, n_: df
-        rows = Q._QUERIES["d_cdc_chunks"](spark, "x").collect()
-    finally:
-        Q._t = orig_t
+    rows = _QUERIES["d_cdc_chunks"](spark, _sf_dir(tmp_path, documents=df)).collect()
     got = {}
     for r in rows:
         got.setdefault(r["doc_id"], []).append(

@@ -1,21 +1,16 @@
-"""Tests for reference-parity operators: chunks (M3), golden compare (V3-V5),
-repair loop (V7), catalog listing/delete (S4/S5), binaryFile ingest (S1/S2),
-round-trip reconstruction (§3.3), fuzzy correction join (J4)."""
+"""Tests for reference-parity operators: chunks (M3), repair loop (V7),
+catalog listing/delete (S4/S5), binaryFile ingest (S1/S2), fuzzy
+correction join (J4)."""
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import Row, functions as F
+from pyspark.sql import functions as F
 
 from pdf_extractor_spark.operators.chunks import (
     reassemble_chunks,
     strip_continuation_marker,
-)
-from pdf_extractor_spark.operators.golden import (
-    failed_urls,
-    golden_compare,
-    structure_compare,
 )
 from pdf_extractor_spark.sources import catalog
 from pdf_extractor_spark.sources.ingest import read_binary_documents
@@ -32,37 +27,6 @@ def test_strip_continuation_marker(spark):
     df = spark.createDataFrame([("part one [CONTINUE]",), ("clean",)], ["t"])
     got = [r["s"] for r in df.select(strip_continuation_marker(F.col("t")).alias("s")).collect()]
     assert got == ["part one", "clean"]
-
-
-def test_golden_compare_and_failed_urls(spark):
-    extracted = spark.createDataFrame(
-        [("u1", "same text"), ("u2", "different"), ("u3", "only extracted")],
-        ["url", "text"],
-    )
-    golden = spark.createDataFrame(
-        [("u1", "same text"), ("u2", "expected"), ("u4", "only golden")],
-        ["url", "text"],
-    )
-    cmp = golden_compare(extracted, golden)
-    by_url = {r["url"]: r for r in cmp.collect()}
-    assert by_url["u1"]["byte_identical"] is True
-    assert by_url["u2"]["byte_identical"] is False
-    assert by_url["u3"]["both_present"] is False
-    assert by_url["u4"]["both_present"] is False
-    failed = sorted(r["url"] for r in failed_urls(cmp).collect())
-    assert failed == ["u2", "u3", "u4"]
-
-
-def test_structure_compare(spark):
-    extracted = spark.createDataFrame(
-        [("u1", "a\n\nb\n\nc"), ("u2", "a\n\nX")], ["url", "text"]
-    )
-    golden = spark.createDataFrame(
-        [("u1", "a\n\nb\n\nc"), ("u2", "a\n\nb")], ["url", "text"]
-    )
-    got = {r["url"]: r for r in structure_compare(extracted, golden).collect()}
-    assert got["u1"]["count_match"] and got["u1"]["first_match"] and got["u1"]["last_match"]
-    assert got["u2"]["count_match"] and got["u2"]["first_match"] and not got["u2"]["last_match"]
 
 
 def test_catalog_listing_delete_compact(spark, tmp_path):
@@ -147,42 +111,6 @@ def test_rerun_failed_repairs(spark, tmp_path, monkeypatch):
     assert sums["bytes_out"] == len(extract_one(good_html)[0]) > 0
 
 
-def test_render_statement_roundtrip(spark):
-    from pdf_extractor_spark.plans.reconstruct import (
-        render_statement,
-        statement_statistics,
-    )
-    from tests.test_validate import SCHEMA, _item, _meta, _stmt
-
-    stmt = _stmt(
-        meta=_meta(units_multiplier=1000),
-        sections=[
-            Row(
-                section_name="assets",
-                items=[
-                    _item(label="Goodwill", values={"2024-12-31": 1234000.0, "2023-12-31": None}),
-                    _item(
-                        label="Total assets",
-                        is_total=True,
-                        level=0,
-                        values={"2024-12-31": -5000.0, "2023-12-31": 2000.0},
-                    ),
-                ],
-            )
-        ],
-    )
-    df = spark.createDataFrame([("u1", stmt)], SCHEMA)
-    lines = render_statement(df).collect()
-    assert len(lines) == 2
-    # level-1 item indents, value unscaled by 1000 with separators
-    assert lines[0]["rendered"] == "  Goodwill | 1,234 | -"
-    # totals uppercase; negative parenthesized (reference reconstruct_table.py:14-26)
-    assert lines[1]["rendered"] == "TOTAL ASSETS | (5) | 2"
-
-    stats = statement_statistics(df).collect()
-    assert stats[0]["section_name"] == "assets" and stats[0]["n_items"] == 2
-
-
 def test_fuzzy_label_correction_join(spark):
     from pdf_extractor_spark.operators.merges import fuzzy_label_correction_join
 
@@ -202,7 +130,7 @@ def test_multiprobe_improves_recall_same_plan_shape(spark):
     recall@10 vs single-probe on the sf0.01 embeddings, while keeping the
     filter+rescore plan shape (no join of the full table against itself)."""
     from pdf_extractor_spark.operators import similarity as S
-    from pdf_extractor_spark.queries import _query_vec
+    from pdf_extractor_spark.queries.q06_embeddings import _query_vec
 
     sf = "/root/testdata/sf0.01"
     e = spark.read.parquet(f"{sf}/embeddings.parquet")

@@ -765,7 +765,7 @@ def test_topic_classify_planted_winner(spark):
     """The planted topic wins for every marked class, 'none' only for the
     unmarked class, score equals the planted instance count, and the
     cross-topic noise term shows up in total_hits on even ids."""
-    from pdf_extractor_spark.queries import _TOPIC_LEX
+    from pdf_extractor_spark.queries.q18_pass11_unicode_topic import _TOPIC_LEX
 
     rows = _q("t_topic_classify")(spark, SF).collect()
     names = [n for n, _ in _TOPIC_LEX]
@@ -884,7 +884,7 @@ def test_script_detect_planted_dominance(spark):
 
     rows = {r["doc_id"]: r for r in _q("t_script_detect")(spark, SF).collect()}
     docs = spark.read.parquet(f"{SF}/documents.parquet").collect()
-    from pdf_extractor_spark.queries import _SCRIPTS
+    from pdf_extractor_spark.queries.q19_pass12_content_gates import _SCRIPTS
 
     # python re lacks \x{...}: rebuild the classes from the ranges directly
     py_pat = {

@@ -1,8 +1,7 @@
-"""Tests for multi-format sinks, multimodal plumbing, incremental batches."""
+"""Tests for multi-format sinks and multimodal plumbing."""
 
 from __future__ import annotations
 
-import datetime
 import glob
 import json
 import os
@@ -103,30 +102,6 @@ def test_frame_sample_plan(spark):
     got = {r["media_id"]: r["count"] for r in out}
     assert got[1] == 4  # 0,1000,2000,3000
     assert got[2] == 1  # frame 0
-
-
-def test_incremental_batches(spark, tmp_path):
-    from pdf_extractor_spark.sources import catalog
-    from pdf_extractor_spark.streaming.incremental import process_in_batches
-
-    base = datetime.datetime(2024, 1, 1)
-    rows = [
-        (f"u{i}", base + datetime.timedelta(hours=i), b"<p>%b</p>" % (b"content words enough to keep %d " % i * 3), "", "en")
-        for i in range(6)
-    ]
-    df = spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, html binary, text string, lang string"
-    )
-    table = str(tmp_path / "inc")
-    metrics = process_in_batches(
-        spark, df, table, datetime.timedelta(hours=2), n_partitions=2
-    )
-    assert [m["rows"] for m in metrics] == [2, 2, 2]
-    done = catalog.read_committed(spark, table)
-    assert done.count() == 6
-    # re-running is a no-op (resume)
-    metrics2 = process_in_batches(spark, df, table, datetime.timedelta(hours=3))
-    assert sum(m["rows"] for m in metrics2) == 0
 
 
 def test_every_driver_collect_is_bounded():
@@ -233,11 +208,12 @@ def test_save_curated_corpus_partitioned_and_pruned(spark, tmp_path):
 
 def test_curated_sink_keeps_exactly_the_contract_query_rows(spark, tmp_path):
     """Closing the loop between the oracle-checked sampling queries and the
-    production sink: rows written by curate_and_save must equal the
-    intersection of t_quality_weighted_sample and t_stratified_sample
-    keep-sets on the same table (same salts, same rates)."""
+    production sink: rows written by save_curated_corpus after
+    curate_corpus must equal the intersection of t_quality_weighted_sample
+    and t_stratified_sample keep-sets on the same table (same salts, same
+    rates)."""
     from pdf_extractor_spark.queries import all_queries
-    from pdf_extractor_spark.sources.sinks import curate_and_save
+    from pdf_extractor_spark.sources.sinks import curate_corpus, save_curated_corpus
 
     sf = "/root/testdata/sf0.001"
     qs = all_queries()
@@ -248,8 +224,8 @@ def test_curated_sink_keeps_exactly_the_contract_query_rows(spark, tmp_path):
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     path = str(tmp_path / "curated")
-    curate_and_save(
-        docs, path, rates={"en": 0.1, "de": 0.4}, default_rate=0.8
+    save_curated_corpus(
+        curate_corpus(docs, rates={"en": 0.1, "de": 0.4}, default_rate=0.8), path
     )
     written = {r["doc_id"] for r in spark.read.parquet(path).select("doc_id").collect()}
     assert written == expected

@@ -174,18 +174,19 @@ def test_streaming_first_seen_dedup_matches_batch(spark, tmp_path):
     assert set(streamed) == batch
 
 
-def test_stream_extract_exactly_once_per_url(spark, tmp_path):
-    """foreachBatch + catalog anti-join: every url is committed exactly
-    once — across incremental waves AND across a forced epoch replay (the
-    checkpoint is deleted, the stream reprocesses everything, and the
-    catalog absorbs the replay with zero duplicate rows)."""
+def test_stream_extract_exactly_once_per_url(spark, tmp_path, foreach_batch):
+    """run_extraction_job per foreachBatch micro-batch + catalog anti-join:
+    every url is committed exactly once — across incremental waves AND
+    across a forced epoch replay (the checkpoint is deleted, the stream
+    reprocesses everything, and the catalog absorbs the replay with zero
+    duplicate rows)."""
     import os
     import shutil
 
     from pdf_extractor_spark.extract.udfs import extract_one
     from pdf_extractor_spark.fixtures.synth import synth_corpus
+    from pdf_extractor_spark.pipeline import run_extraction_job
     from pdf_extractor_spark.sources import catalog
-    from pdf_extractor_spark.streaming.incremental import stream_extract_to_catalog
 
     schema = "url string, warc_ts timestamp, html binary, lang string"
     src = str(tmp_path / "src")
@@ -203,8 +204,7 @@ def test_stream_extract_exactly_once_per_url(spark, tmp_path):
         ).write.mode("append").parquet(src)
 
     def run_stream():
-        q = stream_extract_to_catalog(spark, src, schema, table, ckpt).start()
-        q.awaitTermination(180)
+        foreach_batch(src, schema, table, ckpt, run_extraction_job)
 
     write_wave(corpus[:25])
     run_stream()
@@ -253,12 +253,10 @@ def test_stream_extract_exactly_once_per_url(spark, tmp_path):
 
 def test_stream_dedup_within_watermark_matches_batch(spark, tmp_path):
     """At-least-once re-deliveries (identical rows re-sent in a later
-    micro-batch) are dropped by dedup_stream; the kept row set equals the
-    batch dropDuplicates result. maxFilesPerTrigger=1 forces the overlap
-    into a DIFFERENT micro-batch, so the state store (not batch-local
-    dedup) must do the work."""
-    from pdf_extractor_spark.streaming.dedup import dedup_stream
-
+    micro-batch) are dropped by dropDuplicatesWithinWatermark; the kept
+    row set equals the batch dropDuplicates result. maxFilesPerTrigger=1
+    forces the overlap into a DIFFERENT micro-batch, so the state store
+    (not batch-local dedup) must do the work."""
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
     events = _events(spark)
@@ -275,7 +273,8 @@ def test_stream_dedup_within_watermark_matches_batch(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        dedup_stream(stream, key_cols=("event_id",), watermark_delay="1 hour")
+        stream.withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark(["event_id"])
         .writeStream.format("memory")
         .queryName("dedup_sink")
         .outputMode("append")
@@ -366,18 +365,17 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     assert streamed == batch
 
 
-def test_stream_refresh_three_gates_and_replay(spark, tmp_path):
-    """Streaming refresh (stream_refresh_to_catalog): per micro-batch the
-    full three-gate refresh runs — wave 2's exact re-crawls resume away,
+def test_stream_refresh_three_gates_and_replay(spark, tmp_path, foreach_batch):
+    """Streaming refresh (run_refresh_job per foreachBatch micro-batch):
+    per micro-batch the full three-gate refresh runs — wave 2's exact re-crawls resume away,
     its mirror docs (same content, new url) are dropped by the corpus
     near-dup probe against the maintained band index, fresh docs commit —
     and a forced epoch replay (checkpoint deleted) commits nothing new."""
     import shutil
 
     from pdf_extractor_spark.fixtures.synth import make_document_row
-    from pdf_extractor_spark.pipeline import _band_index_table
+    from pdf_extractor_spark.pipeline import _band_index_table, run_refresh_job
     from pdf_extractor_spark.sources import catalog
-    from pdf_extractor_spark.streaming.incremental import stream_refresh_to_catalog
 
     schema = "url string, warc_ts timestamp, html binary, lang string"
     src = str(tmp_path / "src")
@@ -393,10 +391,10 @@ def test_stream_refresh_three_gates_and_replay(spark, tmp_path):
         return (url or r["url"], r["warc_ts"].replace(tzinfo=None), r["html"], r["lang"])
 
     def run_stream():
-        q = stream_refresh_to_catalog(
-            spark, src, schema, table, ckpt, n_partitions=4, band_index_path=idx
-        ).start()
-        q.awaitTermination(240)
+        foreach_batch(
+            src, schema, table, ckpt, run_refresh_job,
+            n_partitions=4, band_index_path=idx,
+        )
 
     try:
         wave([row(i) for i in range(25)])
