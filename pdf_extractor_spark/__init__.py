@@ -12,8 +12,9 @@ Spark DataFrame program:
   becomes pure Spark column expressions (``functions/``);
 - the reference's driver-side merge/dedupe/retry loops (reference main.py)
   become joins / aggregations / anti-join resume (``operators/``, ``plans/``);
-- the reference's multi-format sinks (reference src/formatter.py) become
-  DataFrame writers with a persist-once fan-out (``sources/``).
+- the reference's output files (reference src/formatter.py) become a
+  snapshot catalog with per-partition lineage and a partitioned
+  curated-corpus sink (``sources/``).
 
 Everything here is built on public PySpark 4.x APIs only.
 """

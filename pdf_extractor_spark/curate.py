@@ -12,7 +12,7 @@ sink composition) — into a single batch job with stage accounting:
 Stage counts come from ONE aggregation over a per-document flags frame
 (never a count() action per stage), and the written keep-set is exactly
 the conjunction of the per-stage flags — asserted against the
-independently-computed operator composition in tests/test_pipeline_e2e.py.
+independently-computed operator composition in tests/test_sinks_multimodal.py.
 
 Scale posture: the flags frame costs the repetition_stats shuffle
 (map-side partial agg on (id, token)), one md5 groupBy for the exact-dup
@@ -71,8 +71,8 @@ def curation_flags(
         .withColumn("_is_first", F.lit(True))
     )
     # the SAME predicate expressions the oracle-checked contract queries
-    # and sinks.curate_corpus use — shared helpers, not copies, so the
-    # --curate surface can never drift from them
+    # use — shared helpers, not copies, so the --curate surface can never
+    # drift from them
     q_keep = quality_keep_expr(F.col(id_col), F.col(text_col))
     if rates is not None:
         rate = stratified_rate_expr(rates, strata_col, default_rate)

@@ -106,19 +106,20 @@ def _parse_objects(data: bytes) -> dict[int, tuple[bytes, bytes | None]]:
 
 
 def _parse_object_at(
-    data: bytes, offset: int, expected_num: int
+    data: bytes, offset: int, expected_num: int | None = None
 ) -> tuple[bytes, bytes | None] | None:
-    """Parse the object at a byte ``offset`` from an xref entry; None when
-    the offset does not hold the expected object (corrupt/stale xref)."""
+    """Parse the object at a byte ``offset`` (from an xref entry or a
+    trailer pointer); None when the offset holds no object, or holds one
+    other than ``expected_num`` when that is given (corrupt/stale xref)."""
     if not (0 <= offset < len(data)):
         return None
     pos = offset
     while pos < len(data) and data[pos] in b" \t\r\n\x00":
         pos += 1
     m = _OBJ_RE.match(data, pos)
-    if not m or int(m.group(1)) != expected_num:
+    if not m or (expected_num is not None and int(m.group(1)) != expected_num):
         return None
-    num, header, stream = _parse_object_body(data, m)
+    _num, header, stream = _parse_object_body(data, m)
     return header, stream
 
 
@@ -193,7 +194,7 @@ def _xref_live_entries(data: bytes) -> dict[int, tuple[int, int, int]]:
     pos, seen = int(last.group(1)), set()
     while 0 <= pos < len(data) and pos not in seen:
         seen.add(pos)
-        obj = _parse_object_at_any(data, pos)
+        obj = _parse_object_at(data, pos)
         if obj is None:
             break
         header, stream = obj
@@ -229,20 +230,6 @@ def _xref_live_entries(data: bytes) -> dict[int, tuple[int, int, int]]:
             break
         pos = prev
     return {n: e for n, e in live.items() if e[0] in (1, 2)}
-
-
-def _parse_object_at_any(data: bytes, offset: int) -> tuple[bytes, bytes | None] | None:
-    """Like _parse_object_at but without an expected object number."""
-    if not (0 <= offset < len(data)):
-        return None
-    pos = offset
-    while pos < len(data) and data[pos] in b" \t\r\n\x00":
-        pos += 1
-    m = _OBJ_RE.match(data, pos)
-    if not m:
-        return None
-    _num, header, stream = _parse_object_body(data, m)
-    return header, stream
 
 
 def _resolve_objects(data: bytes) -> dict[int, tuple[bytes, bytes | None]]:

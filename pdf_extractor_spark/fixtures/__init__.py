@@ -2,7 +2,6 @@ from pdf_extractor_spark.fixtures.synth import (
     make_document_row,
     make_pdf,
     synth_corpus,
-    synth_corpus_pdf,
 )
 
-__all__ = ["make_document_row", "make_pdf", "synth_corpus", "synth_corpus_pdf"]
+__all__ = ["make_document_row", "make_pdf", "synth_corpus"]

@@ -331,14 +331,3 @@ def make_document_row(doc_id: int, seed: int = 42, scale: int = 1) -> dict:
 
 def synth_corpus(n: int, seed: int = 42) -> list[dict]:
     return [make_document_row(i, seed) for i in range(n)]
-
-
-def synth_corpus_pdf(n: int, seed: int = 42) -> list[dict]:
-    """All-PDF variant for PDF-focused tests."""
-    rows = []
-    for i in range(n):
-        r = make_document_row(i, seed)
-        r["html"] = make_pdf_payload(i, seed)
-        r["text"] = ""
-        rows.append(r)
-    return rows

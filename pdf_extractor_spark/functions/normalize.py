@@ -60,16 +60,6 @@ def scale_units(value: Column, multiplier: Column) -> Column:
     ).otherwise(value)
 
 
-def unscale_units(value: Column, multiplier: Column) -> Column:
-    """F7 — v / multiplier, thousands separators, '(…)' for negatives
-    (reference reconstruct_table.py:14-26)."""
-    scaled = value / multiplier
-    formatted = F.format_number(F.abs(scaled), 0)
-    return F.when(value < 0, F.concat(F.lit("("), formatted, F.lit(")"))).otherwise(
-        formatted
-    )
-
-
 def normalize_note_ref(col: Column) -> Column:
     """F8 — 'Note 7.1' -> '7.1' (reference src/notes_extractor.py:70-95)."""
     return F.regexp_extract(col, NOTE_REF_RE, 1)
@@ -85,14 +75,6 @@ def note_key_to_id(col: Column) -> Column:
     return F.replace(
         F.regexp_replace(col, r"^note_", ""), F.lit("_"), F.lit(".")
     )
-
-
-def extract_fenced_json(col: Column) -> Column:
-    """F10 — strip ```json fences, else outermost {...}
-    (reference src/formatter.py:70,86)."""
-    fenced = F.regexp_extract(col, r"```(?:json)?\s*(\{[\s\S]*\})\s*```", 1)
-    braced = F.regexp_extract(col, r"(\{[\s\S]*\})", 1)
-    return F.when(F.length(fenced) > 0, fenced).otherwise(braced)
 
 
 def derive_is_total(row_kind: Column, label: Column) -> Column:

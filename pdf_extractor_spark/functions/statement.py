@@ -76,40 +76,6 @@ def _normalize_item(item: Column, pos: Column, meta: Column) -> Column:
     )
 
 
-def infer_value_types(df: DataFrame, key_col: str = "col_key", text_col: str = "raw_value") -> DataFrame:
-    """F16 — scan observed cell strings, vote a value_type per column key
-    (reference src/validator.py:734-769): number/percent/date/text by
-    majority (mode), ties broken by the fixed order number>percent>date>text."""
-    raw = F.col(text_col)
-    # null-like cells carry no type evidence (reference skips blanks)
-    df = df.filter(N.clean_null_likes(raw).isNotNull())
-    tag = (
-        F.when(N.coerce_percent(raw).isNotNull(), "percent")
-        .when(N.coerce_numeric_string(raw).isNotNull(), "number")
-        .when(N.is_iso_date(F.trim(raw)), "date")
-        .otherwise("text")
-    )
-    priority = F.when(F.col("value_type") == "number", 0).when(
-        F.col("value_type") == "percent", 1
-    ).when(F.col("value_type") == "date", 2).otherwise(3)
-    counts = (
-        df.select(F.col(key_col), tag.alias("value_type"))
-        .groupBy(key_col, "value_type")
-        .count()
-    )
-    ranked = counts.withColumn("_prio", priority)
-    best = ranked.groupBy(key_col).agg(
-        F.min(
-            F.struct(
-                (-F.col("count")).alias("neg"),
-                F.col("_prio").alias("p"),
-                F.col("value_type").alias("t"),
-            )
-        )["t"].alias("value_type")
-    )
-    return best
-
-
 def normalize_statement(df: DataFrame, stmt_col: str = "statement") -> DataFrame:
     """Apply the full normalization pass; adds an ``axis`` column (F17)."""
     stmt = F.col(stmt_col)

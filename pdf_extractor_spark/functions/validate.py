@@ -1,4 +1,4 @@
-"""V1/V2 (SURVEY.md §2.8): schema + reconstruction validators as constraint
+"""V1 (SURVEY.md §2.8): the statement schema validator as constraint
 columns — a pure ``select`` building ``errors: array<string>``, ``warnings``,
 ``is_valid`` and the A11 confidence score. Mirrors the reference's
 validate_financial_json error catalog (reference src/validator.py:947-1355)
@@ -138,25 +138,4 @@ def validate_statements(df: DataFrame, stmt_col: str = "statement") -> DataFrame
         .withColumn(
             "confidence", confidence_score(F.size("errors"), F.size("warnings"))
         )
-    )
-
-
-def reconstruction_check(df: DataFrame, stmt_col: str = "statement") -> DataFrame:
-    """V2 — reconstruction validator (reference reconstruct_table.py:115-173):
-    metadata complete, sections present, per-item label+values, values keys
-    within periods. Emits per-document counts used by the round-trip test."""
-    stmt = F.col(stmt_col)
-    sections = stmt.getField("sections")
-    return df.select(
-        "*",
-        F.coalesce(F.size(sections), F.lit(0)).alias("n_sections"),
-        F.coalesce(
-            F.aggregate(
-                sections,
-                F.lit(0),
-                lambda acc, s: acc + F.coalesce(F.size(s.getField("items")), F.lit(0)),
-            ),
-            F.lit(0),
-        ).alias("n_items"),
-        (F.size(statement_errors(stmt)) == 0).alias("reconstructable"),
     )

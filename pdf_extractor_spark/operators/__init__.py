@@ -1,1 +1,1 @@
-"""DataFrame operators: text analysis, dedup, similarity search, merges."""
+"""DataFrame operators: text analysis, dedup, similarity search."""

@@ -11,14 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-CONTINUE_MARKER = "[CONTINUE]"
-
-
-def strip_continuation_marker(col):
-    """Remove the trailing continuation marker from a chunk (reference
-    src/extractor.py:231-236 strips it before concatenating)."""
-    return F.regexp_replace(col, r"\s*\[CONTINUE\]\s*$", "")
-
 
 def reassemble_chunks(
     df: DataFrame,

@@ -156,18 +156,10 @@ def minhash_lsh_pairs(
     handled by exact/fingerprint dedup anyway — standard practice, cf.
     datasketch MinHashLSH's and BigQuery's bucket caps).
     """
-    banded = with_minhash_bands(
-        df, id_col, text_col, k, bands, shingle_n, n_partitions
+    banded = _drop_hot_buckets(
+        with_minhash_bands(df, id_col, text_col, k, bands, shingle_n, n_partitions),
+        max_bucket,
     )
-    if max_bucket is not None:
-        # hot buckets are FEW by construction -> broadcast anti-join
-        hot = (
-            banded.groupBy("band", "key")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_bucket)
-            .select("band", "key")
-        )
-        banded = banded.join(F.broadcast(hot), ["band", "key"], "left_anti")
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -193,6 +185,67 @@ def jaccard_similarity(a: Column, b: Column) -> Column:
     )
 
 
+def _drop_hot_buckets(banded: DataFrame, max_bucket: int | None) -> DataFrame:
+    """(id, band, key) rows minus the buckets holding more than
+    ``max_bucket`` rows (all rows when ``max_bucket`` is None)."""
+    if max_bucket is None:
+        return banded
+    # hot buckets are FEW by construction -> broadcast anti-join
+    hot = (
+        banded.groupBy("band", "key")
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") > max_bucket)
+        .select("band", "key")
+    )
+    return banded.join(F.broadcast(hot), ["band", "key"], "left_anti")
+
+
+def _shingle_sets(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_n: int,
+    n_partitions: int | None,
+    *extra: Column,
+) -> DataFrame:
+    """(id, *extra, sh, n): each doc's distinct shingles and their count —
+    the per-doc side of Jaccard verification, computed ONCE before any pair
+    join, behind a repartition barrier on id when ``n_partitions`` is set."""
+    sh = df.select(
+        F.col(id_col).alias("id"), *extra, word_tokens(F.col(text_col)).alias("_t")
+    )
+    if n_partitions:
+        sh = sh.repartition(n_partitions, "id")
+    keep = sh.columns[1:-1]
+    return sh.select(
+        "id",
+        *keep,
+        F.array_distinct(shingles_from_tokens(F.col("_t"), shingle_n)).alias("sh"),
+    ).select("id", *keep, "sh", F.size("sh").alias("n"))
+
+
+def _jaccard_at_least(
+    joined: DataFrame, left: Column, right: Column, a: str, b: str, threshold: float
+) -> DataFrame:
+    """(left, right, jaccard) over ``joined``, which holds two
+    ``_shingle_sets`` sides aliased ``a`` and ``b``: the distinct-shingle
+    Jaccard, rounded to 6 places, kept where it is >= ``threshold``."""
+    paired = joined.select(
+        left,
+        right,
+        F.size(F.array_intersect(F.col(f"{a}.sh"), F.col(f"{b}.sh"))).alias("inter"),
+        F.col(f"{a}.n").alias("na"),
+        F.col(f"{b}.n").alias("nb"),
+    )
+    union = paired["na"] + paired["nb"] - paired["inter"]
+    jac = F.when(union <= 0, F.lit(0.0)).otherwise(
+        F.round(paired["inter"].cast("double") / union, 6)
+    )
+    return paired.select(*paired.columns[:2], jac.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -213,47 +266,34 @@ def ngram_jaccard_pairs(
     S ways, identical pair set at k·S-way parallelism (the SemDeDup
     pattern; SCALE.md §9.2).
     """
-    sh = df.select(
-        F.col(id_col).alias("id"),
+    # barrier + spread: token/shingle projections run pre-join, spread by id
+    # (grp has few values); the join adds its own grp exchange, which both
+    # sides share (ReusedExchange)
+    sh = _shingle_sets(
+        df, id_col, text_col, shingle_n, n_partitions,
         (F.col(group_col) if group_col else F.lit(1)).alias("grp"),
-        word_tokens(F.col(text_col)).alias("_t"),
     )
-    if n_partitions:
-        # barrier + spread: token/shingle projections run pre-join, spread by
-        # id (grp has few values); the join adds its own grp exchange, which
-        # both sides share (ReusedExchange)
-        sh = sh.repartition(n_partitions, "id")
     if shards is None:  # the salt spreads work only; output shard-invariant
         shards = max(2, df.sparkSession.sparkContext.defaultParallelism)
-    # per-doc work done ONCE before the pair join: distinct shingles + size
-    sh = sh.select(
-        "id", "grp",
-        F.array_distinct(shingles_from_tokens(F.col("_t"), shingle_n)).alias("sh"),
-    ).select("id", "grp", "sh", F.size("sh").alias("n"))
     a = sh.withColumn(
         "_shard", F.pmod(F.xxhash64(F.col("id")), F.lit(shards))
     ).alias("a")
     b = sh.withColumn(
         "_shardb", F.explode(F.sequence(F.lit(0), F.lit(shards - 1)))
     ).alias("b")
-    paired = a.join(
+    joined = a.join(
         b,
         (F.col("a.grp") == F.col("b.grp"))
         & (F.col("a._shard") == F.col("b._shardb"))
         & (F.col("a.id") < F.col("b.id")),
-    ).select(
+    )
+    return _jaccard_at_least(
+        joined,
         F.col("a.id").alias("id_a"),
         F.col("b.id").alias("id_b"),
-        F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh"))).alias("inter"),
-        F.col("a.n").alias("na"),
-        F.col("b.n").alias("nb"),
-    )
-    union = paired["na"] + paired["nb"] - paired["inter"]
-    jac = F.when(union <= 0, F.lit(0.0)).otherwise(
-        F.round(paired["inter"].cast("double") / union, 6)
-    )
-    return paired.select("id_a", "id_b", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
+        "a",
+        "b",
+        threshold,
     )
 
 
@@ -282,33 +322,13 @@ def lsh_verified_pairs(
     pairs = minhash_lsh_pairs(
         df, id_col, text_col, k, bands, shingle_n, n_partitions
     )
-    sh = df.select(
-        F.col(id_col).alias("id"), word_tokens(F.col(text_col)).alias("_t")
-    )
-    if n_partitions:
-        sh = sh.repartition(n_partitions, "id")
-    sh = sh.select(
-        "id",
-        F.array_distinct(shingles_from_tokens(F.col("_t"), shingle_n)).alias("sh"),
-    ).select("id", "sh", F.size("sh").alias("n"))
+    sh = _shingle_sets(df, id_col, text_col, shingle_n, n_partitions)
     sa, sb = sh.alias("sa"), sh.alias("sb")
-    paired = (
-        pairs.join(sa, pairs["id_a"] == F.col("sa.id"))
-        .join(sb, pairs["id_b"] == F.col("sb.id"))
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh"))).alias("inter"),
-            F.col("sa.n").alias("na"),
-            F.col("sb.n").alias("nb"),
-        )
+    joined = pairs.join(sa, pairs["id_a"] == F.col("sa.id")).join(
+        sb, pairs["id_b"] == F.col("sb.id")
     )
-    union = paired["na"] + paired["nb"] - paired["inter"]
-    jac = F.when(union <= 0, F.lit(0.0)).otherwise(
-        F.round(paired["inter"].cast("double") / union, 6)
-    )
-    return paired.select("id_a", "id_b", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
+    return _jaccard_at_least(
+        joined, F.col("id_a"), F.col("id_b"), "sa", "sb", threshold
     )
 
 
@@ -357,23 +377,14 @@ def incremental_near_dups(
     banded_new = with_minhash_bands(
         new_df, id_col, text_col, k, bands, shingle_n, n_partitions
     )
-    banded_corpus = (
+    banded_corpus = _drop_hot_buckets(
         corpus_band_index
         if corpus_band_index is not None
         else with_minhash_bands(
             corpus_df, id_col, text_col, k, bands, shingle_n, n_partitions
-        )
+        ),
+        max_bucket,
     )
-    if max_bucket is not None:
-        hot = (
-            banded_corpus.groupBy("band", "key")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_bucket)
-            .select("band", "key")
-        )
-        banded_corpus = banded_corpus.join(
-            F.broadcast(hot), ["band", "key"], "left_anti"
-        )
     pairs = (
         banded_new.alias("n")
         .join(
@@ -386,41 +397,13 @@ def incremental_near_dups(
         )
         .distinct()
     )
-
-    def _shingle_side(df: DataFrame) -> DataFrame:
-        sh = df.select(
-            F.col(id_col).alias("id"), word_tokens(F.col(text_col)).alias("_t")
-        )
-        if n_partitions:
-            sh = sh.repartition(n_partitions, "id")
-        return sh.select(
-            "id",
-            F.array_distinct(
-                shingles_from_tokens(F.col("_t"), shingle_n)
-            ).alias("sh"),
-        ).select("id", "sh", F.size("sh").alias("n"))
-
-    sa = _shingle_side(new_df).alias("sa")
-    sb = _shingle_side(corpus_df).alias("sb")
-    paired = (
-        pairs.join(sa, pairs["new_id"] == F.col("sa.id"))
-        .join(sb, pairs["corpus_id"] == F.col("sb.id"))
-        .select(
-            "new_id",
-            "corpus_id",
-            F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh"))).alias(
-                "inter"
-            ),
-            F.col("sa.n").alias("na"),
-            F.col("sb.n").alias("nb"),
-        )
+    sa = _shingle_sets(new_df, id_col, text_col, shingle_n, n_partitions).alias("sa")
+    sb = _shingle_sets(corpus_df, id_col, text_col, shingle_n, n_partitions).alias("sb")
+    joined = pairs.join(sa, pairs["new_id"] == F.col("sa.id")).join(
+        sb, pairs["corpus_id"] == F.col("sb.id")
     )
-    union = paired["na"] + paired["nb"] - paired["inter"]
-    jac = F.when(union <= 0, F.lit(0.0)).otherwise(
-        F.round(paired["inter"].cast("double") / union, 6)
-    )
-    return paired.select("new_id", "corpus_id", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
+    return _jaccard_at_least(
+        joined, F.col("new_id"), F.col("corpus_id"), "sa", "sb", threshold
     )
 
 
@@ -846,15 +829,6 @@ def exact_duplicates(
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
-
-
-def drop_exact_duplicates(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Keep one representative (min id) per exact text; preserves all columns."""
-    w_key = df.withColumn("_h", F.md5(F.encode(F.col(text_col), "UTF-8")))
-    reps = w_key.groupBy("_h").agg(F.min(id_col).alias(id_col))
-    return w_key.join(reps, ["_h", id_col], "inner").drop("_h")
 
 
 _CC_LOOP_CONF = {

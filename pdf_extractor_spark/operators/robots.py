@@ -132,44 +132,3 @@ def robots_decisions(
         F.coalesce(F.col("_best.a") == 1, F.lit(True)).alias("allowed"),
         F.col("_best.p").alias("rule_pattern"),
     )
-
-
-def parse_robots_txt(content: str, user_agent: str = "*") -> list[tuple[str, str]]:
-    """Parse one robots.txt body into the (rule_type, pattern) list for
-    ``user_agent`` (pure function; RFC 9309 group selection: the group
-    whose User-agent line best matches, '*' as fallback; empty-pattern
-    rules are ignored per the RFC).
-
-    Exists so a fetcher can turn fetched robots bodies into the rule
-    table ``robots_decisions`` consumes (via a mapInPandas over the
-    robots fetch results, same plumbing as sources/warc.read_warc).
-    """
-    groups: list[tuple[list[str], list[tuple[str, str]]]] = []
-    agents: list[str] = []
-    rules: list[tuple[str, str]] = []
-    in_group_body = False
-    for raw in content.splitlines():
-        line = raw.split("#", 1)[0].strip()
-        if not line or ":" not in line:
-            continue
-        key, _, value = line.partition(":")
-        key = key.strip().lower()
-        value = value.strip()
-        if key == "user-agent":
-            if in_group_body and agents:
-                groups.append((agents, rules))
-                agents, rules = [], []
-            in_group_body = False
-            agents = agents + [value.lower()]
-        elif key in ("allow", "disallow"):
-            in_group_body = True
-            if value:
-                rules.append((key, value))
-    if agents:
-        groups.append((agents, rules))
-    ua = user_agent.lower()
-    exact = [r for a, r in groups if ua != "*" and ua in a]
-    if exact:
-        return exact[0]
-    star = [r for a, r in groups if "*" in a]
-    return star[0] if star else []

@@ -216,8 +216,8 @@ def quality_keep_expr(
     key: Column, text: Column, salt: str = "qsample"
 ) -> Column:
     """Soft quality-weighted keep decision (keep probability = quality
-    score/100, md5-keyed) — shared by sinks.curate_corpus and the
-    curation job."""
+    score/100, md5-keyed) of the curation job: the predicate of the
+    ``t_quality_weighted_sample`` query."""
     from pdf_extractor_spark.operators.textstats import quality_score
 
     return _hash_frac(key, salt) < quality_score(text) / 100.0

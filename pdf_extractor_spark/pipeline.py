@@ -144,6 +144,7 @@ def _commit_with_lineage(sized: DataFrame, output_table: str) -> tuple[dict, int
 
 _BAND_INDEX_DDL = "id STRING, band INT, key STRING"
 _BAND_INDEX_KEYS = ["band", "key"]
+_BAND_INDEX_BUCKETS = 8
 
 
 def _band_index_table(path: str) -> str:
@@ -159,9 +160,7 @@ def run_refresh_job(
     n_partitions: int | None = None,
     context: ExtractContext | None = None,
     near_dup_threshold: float = 0.5,
-    max_bucket: int | None = None,
     band_index_path: str | None = None,
-    band_index_buckets: int = 8,
 ) -> dict:
     """Incremental corpus REFRESH: ingest a new crawl batch into an
     existing corpus table. Three gates, cheapest first:
@@ -212,7 +211,7 @@ def run_refresh_job(
                 band_index_path,
                 _BAND_INDEX_DDL,
                 _BAND_INDEX_KEYS,
-                band_index_buckets,
+                _BAND_INDEX_BUCKETS,
             )
             corpus_band_index = read_table(spark, idx_table)
 
@@ -238,7 +237,6 @@ def run_refresh_job(
                     text_col="text",
                     threshold=near_dup_threshold,
                     n_partitions=n_partitions,
-                    max_bucket=max_bucket,
                     corpus_band_index=corpus_band_index,
                 )
                 dup_urls = matches.select(
@@ -262,7 +260,7 @@ def run_refresh_job(
                         idx_table,
                         band_index_path,
                         _BAND_INDEX_KEYS,
-                        band_index_buckets,
+                        _BAND_INDEX_BUCKETS,
                     )
             elif metrics["rows"] > 0:
                 # incremental maintenance: only the committed batch's bands,
@@ -279,7 +277,7 @@ def run_refresh_job(
                     idx_table,
                     band_index_path,
                     _BAND_INDEX_KEYS,
-                    band_index_buckets,
+                    _BAND_INDEX_BUCKETS,
                 )
         metrics.update(
             {

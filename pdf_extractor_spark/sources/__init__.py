@@ -1,1 +1,1 @@
-"""Sources and sinks: snapshot catalog seam + multi-format writers."""
+"""Sources and sinks: snapshot catalog seam, crawl-format codecs, curated-corpus sink."""

@@ -13,8 +13,8 @@ Everything here is native-expression Spark:
   leading www. dropped, host labels reversed comma-joined, ')' + path) —
   the sort/join key the format exists for.
 - ``parse_cdx_lines(df, col)``: line -> (urlkey, warc_ts, url, mime,
-  status, digest, length) via one split + get_json_object projections.
-- ``read_cdx(spark, path)``: text source + the parser.
+  status, digest, length) via one split + get_json_object projections;
+  a CDX file read with ``spark.read.text`` is its input.
 
 The w_cdx_index contract query builds lines with deterministic JSON
 field order, md5s the exact bytes, and re-parses them with THIS parser;
@@ -27,7 +27,7 @@ key for range-partitioned joins against the frontier.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 CDX_TS_FMT = "yyyyMMddHHmmss"
 
@@ -72,27 +72,3 @@ def parse_cdx_lines(df: DataFrame, col: str = "value") -> DataFrame:
         F.get_json_object(js, "$.digest").alias("digest"),
         F.get_json_object(js, "$.length").try_cast("long").alias("length"),
     )
-
-
-def read_cdx(spark: SparkSession, path: str) -> DataFrame:
-    """CDX(J) file(s) -> parsed capture DataFrame (text source splits and
-    parallelizes like any line format; .gz works via Hadoop codecs)."""
-    return parse_cdx_lines(spark.read.text(path), "value")
-
-
-def build_cdx_line(
-    urlkey: str,
-    ts14: str,
-    url: str,
-    mime: str,
-    status: str,
-    digest: str,
-    length: int,
-) -> str:
-    """Deterministic CDXJ line (fixed JSON key order) — the writer twin
-    used by tests and the contract query's expected-bytes construction."""
-    js = (
-        '{"url": "%s", "mime": "%s", "status": "%s", "digest": "%s", '
-        '"length": "%d"}' % (url, mime, status, digest, length)
-    )
-    return f"{urlkey} {ts14} {js}"

@@ -8,23 +8,15 @@ HTTP response (status line + headers + payload). Common Crawl compresses
 each record as its own gzip member so readers can split a .warc.gz at
 member boundaries without decompressing the whole file.
 
-This module is a from-scratch codec (writer + parser, pure functions — the
-writer exists so tests and fixtures can synthesize deterministic archives;
-no external data) plus the Spark reader:
+This module is a from-scratch codec for WARC, WET and WAT records (writer
++ parser, pure functions — the writer exists so tests and the codec
+contract queries can synthesize deterministic archives; no external data).
+The ``w_warc_codec``, ``w_wet_codec`` and ``w_wat_codec`` queries run the
+parser inside ``mapInPandas``.
 
-- ``read_warc``: ``binaryFile`` scan -> ``mapInPandas`` record splitter ->
-  the engine's (url, warc_ts, html, text, lang) input schema, ready for
-  ``pipeline.extract_documents``.
-
-Scale posture: one task per WARC file (Common Crawl files are ~1 GB, so a
-100 TB crawl is ~100k natural splits — parallelism comes free). Records
-are decompressed member-by-member and emitted in bounded row batches, so
-peak memory per task is O(file + batch), not O(corpus). A production
-deployment over petabyte archives would additionally split single files by
-gzip-member offset (the cdx index provides them) — same parser, more
-splits; the per-record-member framing is what makes that possible.
-Malformed tails and truncated records are skipped, never fatal: a crawl
-archive with one bad record must not kill a 100k-file job.
+Records are decompressed member-by-member. Malformed tails and truncated
+records are skipped, never fatal: a crawl archive with one bad record must
+not kill a 100k-file job.
 """
 
 from __future__ import annotations
@@ -33,8 +25,6 @@ import datetime
 import hashlib
 import zlib
 from typing import Iterable, Iterator
-
-from pyspark.sql import DataFrame, SparkSession, functions as F
 
 CRLF = b"\r\n"
 _WARC_DATE_FMT = "%Y-%m-%dT%H:%M:%SZ"
@@ -411,119 +401,3 @@ def warc_rows(data: bytes) -> Iterator[dict]:
             "text": "",
             "lang": None,
         }
-
-
-# --- Spark reader --------------------------------------------------------------
-
-_ROW_SCHEMA = (
-    "url string, warc_ts timestamp, html binary, text string, lang string"
-)
-_BATCH_ROWS = 256
-
-
-def read_warc(
-    spark: SparkSession,
-    path: str,
-    glob: str = "*.warc*",
-    n_partitions: int | None = None,
-) -> DataFrame:
-    """Directory of .warc / .warc.gz files -> north-rule input rows.
-
-    ``binaryFile`` scan (one task per archive; ~1 GB Common Crawl files
-    give a 100 TB crawl ~100k natural splits) -> ``mapInPandas`` running
-    the pure-function record parser, emitting bounded row batches.
-    ``n_partitions`` repartitions the file list BEFORE parsing, for
-    archives-per-task balance when file counts are small.
-    """
-    import pandas as pd
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("content")
-    )
-    if n_partitions:
-        files = files.repartition(n_partitions)
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        cols = ["url", "warc_ts", "html", "text", "lang"]
-        buf: list[dict] = []
-        for pdf in batches:
-            for content in pdf["content"]:
-                for row in warc_rows(bytes(content)):
-                    buf.append(row)
-                    if len(buf) >= _BATCH_ROWS:
-                        yield pd.DataFrame(buf, columns=cols)
-                        buf = []
-        if buf:
-            yield pd.DataFrame(buf, columns=cols)
-
-    return files.mapInPandas(gen, schema=_ROW_SCHEMA)
-
-
-def read_wet(
-    spark: SparkSession,
-    path: str,
-    glob: str = "*.wet*",
-    n_partitions: int | None = None,
-) -> DataFrame:
-    """Directory of .warc.wet / .warc.wet.gz files -> (url, warc_ts, text)
-    rows. Same scale posture as ``read_warc`` (one task per ~1 GB archive,
-    member-by-member decompression, bounded row batches) — WET is the
-    already-extracted side of a crawl, so rows go straight to curation
-    operators with no extraction pass."""
-    import pandas as pd
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("content")
-    )
-    if n_partitions:
-        files = files.repartition(n_partitions)
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        cols = ["url", "warc_ts", "text"]
-        buf: list[dict] = []
-        for pdf in batches:
-            for content in pdf["content"]:
-                for row in wet_rows(bytes(content)):
-                    buf.append(row)
-                    if len(buf) >= _BATCH_ROWS:
-                        yield pd.DataFrame(buf, columns=cols)
-                        buf = []
-        if buf:
-            yield pd.DataFrame(buf, columns=cols)
-
-    return files.mapInPandas(
-        gen, schema="url string, warc_ts timestamp, text string"
-    )
-
-
-def synth_warc_archive(
-    doc_ids: Iterable[int],
-    seed: int = 42,
-    scale: int = 1,
-    gzip_members: bool = True,
-    warcinfo_filename: str | None = "synth.warc.gz",
-) -> bytes:
-    """Deterministic fixture archive: the standard synth corpus rows
-    serialized as WARC (same (seed, doc_id) pure functions as every other
-    fixture — no external data)."""
-    from pdf_extractor_spark.fixtures.synth import make_document_row
-
-    def recs():
-        for i in doc_ids:
-            r = make_document_row(i, seed=seed, scale=scale)
-            ct = (
-                "application/pdf"
-                if r["html"][:5] == b"%PDF-"
-                else "text/html"
-            )
-            yield r["url"], r["warc_ts"].replace(tzinfo=None), r["html"], ct
-
-    return build_warc(
-        recs(), gzip_members=gzip_members, warcinfo_filename=warcinfo_filename
-    )

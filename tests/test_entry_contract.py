@@ -89,26 +89,3 @@ def test_entry_runs_and_returns_rows(spark):
 def test_sample_queries_run_at_sf0001(spark, name):
     df = E.queries()[name](spark, "/root/testdata/sf0.001")
     assert df.count() >= 0  # materializes without error
-
-
-def test_apply_corrections(spark):
-    from pdf_extractor_spark.operators.merges import apply_corrections
-
-    items = spark.createDataFrame(
-        [
-            ("u1", "Goodwill", {"2024-12-31": 4.38, "2023-12-31": 4.1}),
-            ("u1", "Other", {"2024-12-31": 1.0}),
-            ("u2", "Goodwill", {"2024-12-31": 9.9}),
-        ],
-        "url string, label string, values map<string,double>",
-    )
-    corrections = spark.createDataFrame(
-        [("u1", " goodwill ", "2024-12-31", 4380000.0)],
-        "url string, label string, period_key string, new_value double",
-    )
-    out = apply_corrections(items, corrections)
-    got = {(r["url"], r["label"]): r["values"] for r in out.collect()}
-    assert got[("u1", "Goodwill")]["2024-12-31"] == 4380000.0
-    assert got[("u1", "Goodwill")]["2023-12-31"] == 4.1  # untouched
-    assert got[("u1", "Other")]["2024-12-31"] == 1.0
-    assert got[("u2", "Goodwill")]["2024-12-31"] == 9.9  # different doc untouched

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.functions import normalize as N
@@ -50,14 +51,11 @@ def test_coerce_percent(spark):
     assert _one(spark, N.coerce_percent(F.lit("abc"))) is None
 
 
-def test_scale_unscale_units(spark):
+def test_scale_units(spark):
     assert _one(spark, N.scale_units(F.lit(4.38), F.lit(1000000))) == 4380000.0
     assert _one(spark, N.scale_units(F.lit(0.0), F.lit(1000))) == 0.0
     # |v| >= multiplier means the value is already in original units
     assert _one(spark, N.scale_units(F.lit(2500.0), F.lit(1000))) == 2500.0
-    # unscale: -1234000 at multiplier 1000 -> "(1,234)"
-    assert _one(spark, N.unscale_units(F.lit(-1234000.0), F.lit(1000))) == "(1,234)"
-    assert _one(spark, N.unscale_units(F.lit(5000.0), F.lit(1000))) == "5"
 
 
 def test_note_refs(spark):
@@ -65,13 +63,6 @@ def test_note_refs(spark):
     assert _one(spark, N.normalize_note_ref(F.lit("see notes 3 and 4"))) == "3"
     assert _one(spark, N.note_id_to_key(F.lit("8.3"))) == "note_8_3"
     assert _one(spark, N.note_key_to_id(F.lit("note_8_3"))) == "8.3"
-
-
-def test_extract_fenced_json(spark):
-    fenced = '```json\n{"a": 1}\n```'
-    assert _one(spark, N.extract_fenced_json(F.lit(fenced))) == '{"a": 1}'
-    loose = 'prefix {"b": {"c": 2}} suffix'
-    assert _one(spark, N.extract_fenced_json(F.lit(loose))) == '{"b": {"c": 2}}'
 
 
 def test_derive_is_total(spark):
@@ -174,3 +165,26 @@ def test_pay_level_domain_rules(spark):
     rows = df.select("host", "want", pay_level_domain(F.col("host")).alias("got")).collect()
     for r in rows:
         assert r["got"] == r["want"], r["host"]
+
+
+# -------------------------------------------------------- F20 format_size
+@pytest.mark.parametrize(
+    "n,expected",
+    [
+        (0, "0.0 B"),
+        (1023, "1023.0 B"),
+        (1024, "1.0 KB"),
+        (1536, "1.5 KB"),
+        (1048576, "1.0 MB"),
+        (1073741824, "1.0 GB"),
+        (1099511627776, "1.0 TB"),
+        (5 * 1099511627776 + 1099511627776 // 2, "5.5 TB"),
+        (2048 * 1099511627776, "2048.0 TB"),  # unbounded TB tail
+        # numerator beyond 2^53 and not a power of two: double division
+        # would floor across the boundary here; true long div must not
+        (3 * 2**50 + 7, "3072.0 TB"),
+        (2**53 + 987654321, "8192.0 TB"),
+    ],
+)
+def test_format_size_units(spark, n, expected):
+    assert _one(spark, N.format_size(F.lit(n))) == expected

@@ -7,7 +7,6 @@ import math
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.operators import dedup as D
-from pdf_extractor_spark.operators import merges as M
 from pdf_extractor_spark.operators import similarity as S
 from pdf_extractor_spark.operators import textstats as T
 
@@ -86,12 +85,6 @@ def test_exact_duplicates(spark):
     groups = D.exact_duplicates(_docs(spark)).collect()
     dups = [g for g in groups if g["n_copies"] > 1]
     assert len(dups) == 1 and dups[0]["keep_id"] == 1 and dups[0]["n_copies"] == 2
-
-
-def test_drop_exact_duplicates(spark):
-    out = D.drop_exact_duplicates(_docs(spark))
-    ids = sorted(r["doc_id"] for r in out.collect())
-    assert ids == [1, 3, 4, 5]
 
 
 def test_minhash_lsh_finds_near_dups(spark):
@@ -173,46 +166,6 @@ def test_cosine_near_dup_pairs(spark):
     pairs = {(r["id_a"], r["id_b"]) for r in got}
     assert (0, 4) in pairs
     assert all(r["cosine_sim"] >= 0.95 for r in got)
-
-
-# --- merges ------------------------------------------------------------------
-
-
-def test_last_wins_merge(spark):
-    df = spark.createDataFrame(
-        [("t1", 1, "old"), ("t1", 2, "new"), ("t2", 1, "only")],
-        ["table_id", "round", "payload"],
-    )
-    got = {r["table_id"]: r["payload"] for r in M.last_wins_merge(df, ["table_id"], "round").collect()}
-    assert got == {"t1": "new", "t2": "only"}
-
-
-def test_first_seen_dedupe(spark):
-    df = spark.createDataFrame(
-        [("a", 3), ("a", 1), ("b", 2)], ["key", "pos"]
-    )
-    got = {(r["key"], r["pos"]) for r in M.first_seen_dedupe(df, ["key"], "pos").collect()}
-    assert got == {("a", 1), ("b", 2)}
-
-
-def test_retry_remaining(spark):
-    req = spark.createDataFrame([("1",), ("2",), ("3",)], ["note_id"])
-    done = spark.createDataFrame([("2",)], ["note_id"])
-    got = sorted(r["note_id"] for r in M.retry_remaining(req, done, "note_id").collect())
-    assert got == ["1", "3"]
-
-
-def test_collect_note_refs(spark):
-    df = spark.createDataFrame(
-        [
-            ("u1", ["Note 7.2", "3", "note 7.2"]),
-            ("u1", ["Note 10.1"]),
-            ("u2", ["1.2"]),
-        ],
-        ["url", "notes_reference"],
-    )
-    got = [(r["url"], r["note_id"]) for r in M.collect_note_refs(df).collect()]
-    assert got == [("u1", "3"), ("u1", "7.2"), ("u1", "10.1"), ("u2", "1.2")]
 
 
 def test_winnow_shared_substring_shares_fingerprints(spark):
@@ -1162,31 +1115,6 @@ def test_robots_decisions_rfc9309_precedence(spark):
     assert got[1]["rule_pattern"] == "/private/pub"
     assert got[4]["rule_pattern"] == "/dl/*.zip$"
     assert got[7]["rule_pattern"] is None
-
-
-def test_parse_robots_txt_groups_and_fallback():
-    from pdf_extractor_spark.operators.robots import parse_robots_txt
-
-    body = """
-# comment
-User-agent: fancybot
-Disallow: /fancy
-
-User-agent: *
-User-agent: otherbot
-Disallow: /private
-Allow: /private/pub
-Disallow:
-
-User-agent: latebot
-Disallow: /late
-"""
-    assert parse_robots_txt(body, "fancybot") == [("disallow", "/fancy")]
-    star = parse_robots_txt(body, "nobody-special")
-    assert star == [("disallow", "/private"), ("allow", "/private/pub")]
-    assert parse_robots_txt(body, "otherbot") == star
-    assert parse_robots_txt(body, "latebot") == [("disallow", "/late")]
-    assert parse_robots_txt("", "x") == []
 
 
 def _pagerank_ref(edges, n_iter=3, scale=10**9, d=85):

@@ -1,6 +1,5 @@
 """Tests for reference-parity operators: chunks (M3), repair loop (V7),
-catalog listing/delete (S4/S5), binaryFile ingest (S1/S2), fuzzy
-correction join (J4)."""
+catalog listing/delete (S4/S5)."""
 
 from __future__ import annotations
 
@@ -8,12 +7,8 @@ import os
 
 from pyspark.sql import functions as F
 
-from pdf_extractor_spark.operators.chunks import (
-    reassemble_chunks,
-    strip_continuation_marker,
-)
+from pdf_extractor_spark.operators.chunks import reassemble_chunks
 from pdf_extractor_spark.sources import catalog
-from pdf_extractor_spark.sources.ingest import read_binary_documents
 
 
 def test_reassemble_chunks_order_independent(spark):
@@ -21,12 +16,6 @@ def test_reassemble_chunks_order_independent(spark):
     df = spark.createDataFrame(rows, "url string, chunk_id int, chunk_text string")
     got = {r["url"]: (r["text"], r["n_chunks"]) for r in reassemble_chunks(df.repartition(3)).collect()}
     assert got == {"u1": ("hello world", 2), "u2": ("solo", 1)}
-
-
-def test_strip_continuation_marker(spark):
-    df = spark.createDataFrame([("part one [CONTINUE]",), ("clean",)], ["t"])
-    got = [r["s"] for r in df.select(strip_continuation_marker(F.col("t")).alias("s")).collect()]
-    assert got == ["part one", "clean"]
 
 
 def test_catalog_listing_delete_compact(spark, tmp_path):
@@ -51,20 +40,6 @@ def test_catalog_listing_delete_compact(spark, tmp_path):
     # compact is a no-op-equivalent on a single snapshot
     catalog.compact(spark, table)
     assert catalog.read_committed(spark, table).count() == 2
-
-
-def test_binary_file_ingest(spark, tmp_path):
-    d = tmp_path / "pdfs"
-    d.mkdir()
-    (d / "a.pdf").write_bytes(b"%PDF-1.4 fake")
-    (d / "b.pdf").write_bytes(b"%PDF-1.4 other")
-    (d / "skip.txt").write_bytes(b"not a pdf")
-    df = read_binary_documents(spark, str(d), glob="*.pdf")
-    rows = df.collect()
-    assert len(rows) == 2
-    assert all(r["url"].startswith("file://") and r["url"].endswith(".pdf") for r in rows)
-    assert all(bytes(r["html"]).startswith(b"%PDF-") for r in rows)
-    assert all(r["warc_ts"] is not None for r in rows)
 
 
 def test_rerun_failed_repairs(spark, tmp_path, monkeypatch):
@@ -109,20 +84,6 @@ def test_rerun_failed_repairs(spark, tmp_path, monkeypatch):
     assert sums["docs"] == metrics[0]["retried"] == 1
     assert sums["bytes_in"] == len(good_html)
     assert sums["bytes_out"] == len(extract_one(good_html)[0]) > 0
-
-
-def test_fuzzy_label_correction_join(spark):
-    from pdf_extractor_spark.operators.merges import fuzzy_label_correction_join
-
-    items = spark.createDataFrame(
-        [("Goodwill", 10.0), ("Net Income", 20.0), ("Other", 30.0)],
-        ["label", "value"],
-    )
-    corrections = spark.createDataFrame(
-        [("  goodwill ", 11.0), ("NET INCOME", 22.0)], ["label", "new_value"]
-    )
-    got = {r["label"]: r["value"] for r in fuzzy_label_correction_join(items, corrections).collect()}
-    assert got == {"Goodwill": 11.0, "Net Income": 22.0, "Other": 30.0}
 
 
 def test_multiprobe_improves_recall_same_plan_shape(spark):

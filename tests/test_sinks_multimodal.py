@@ -1,10 +1,7 @@
-"""Tests for multi-format sinks and multimodal plumbing."""
+"""Tests for the curated-corpus sink, the curation job and multimodal
+plumbing."""
 
 from __future__ import annotations
-
-import glob
-import json
-import os
 
 from pyspark.sql import functions as F
 
@@ -12,68 +9,6 @@ from pdf_extractor_spark.operators.multimodal import (
     extract_image_features,
     frame_sample_plan,
 )
-from pdf_extractor_spark.sources.sinks import (
-    display_preview,
-    read_json_with_repair,
-    save_multiple_formats,
-)
-
-
-def _df(spark):
-    return spark.createDataFrame(
-        [(1, "hello world", ["7.1", "8"]), (2, "second doc", [])],
-        "doc_id long, text string, refs array<string>",
-    )
-
-
-def test_multi_format_fanout(spark, tmp_path):
-    out = save_multiple_formats(_df(spark), str(tmp_path), ("json", "txt", "csv", "md"))
-    # json
-    json_rows = []
-    for p in glob.glob(out["json"] + "/part-*"):
-        with open(p) as fh:
-            json_rows += [json.loads(line) for line in fh if line.strip()]
-    assert {r["doc_id"] for r in json_rows} == {1, 2}
-    # txt
-    txt = ""
-    for p in glob.glob(out["txt"] + "/part-*"):
-        txt += open(p).read()
-    assert "hello world" in txt
-    # csv has header and JSON-encoded array cells
-    csv_text = ""
-    for p in glob.glob(out["csv"] + "/part-*.csv"):
-        csv_text += open(p).read()
-    assert "doc_id" in csv_text and '"[\\"7.1\\",\\"8\\"]"' in csv_text
-    # md report exists with fenced json
-    md = open(out["md"]).read()
-    assert md.startswith("# ") and "```json" in md
-
-
-def test_unknown_format_rejected(spark, tmp_path):
-    import pytest
-
-    with pytest.raises(ValueError):
-        save_multiple_formats(_df(spark), str(tmp_path), ("parquet",))
-
-
-def test_read_json_with_repair(spark):
-    rows = [
-        (1, '```json\n{"a": 1, "b": "x"}\n```'),
-        (2, 'noise before {"a": 2, "b": "y"} noise after'),
-        (3, "not json at all"),
-    ]
-    df = spark.createDataFrame(rows, "id long, raw string")
-    out = read_json_with_repair(spark, df, "raw", "a INT, b STRING")
-    got = {r["id"]: (r["parse_ok"], r["parsed"]) for r in out.collect()}
-    assert got[1][0] is True and got[1][1]["a"] == 1
-    assert got[2][0] is True and got[2][1]["b"] == "y"
-    assert got[3][0] is False
-
-
-def test_display_preview_truncates(spark):
-    df = spark.createDataFrame([("x" * 1000,)], "text string")
-    s = display_preview(df, max_chars=50)
-    assert "x" * 10 in s and "x" * 200 not in s
 
 
 def test_image_features_fake_plumbing(spark):
@@ -142,37 +77,6 @@ def test_every_driver_collect_is_bounded():
     assert offenders == [], offenders
 
 
-def test_display_table_preview_tabular_and_fallback(spark):
-    """S11 table preview (reference src/formatter.py:302-336): tabular JSON
-    renders as an aligned table with a rows-shown footer; non-tabular input
-    falls back to the plain preview."""
-    import json
-
-    from pdf_extractor_spark.sources.sinks import display_table_preview
-
-    payload = json.dumps(
-        [{"label": f"Item {i}", "value": i * 10} for i in range(12)]
-    )
-    df = spark.createDataFrame([(payload,)], "text string")
-    out = display_table_preview(df, "text", max_rows=10)
-    assert "| label" in out and "| value" in out
-    assert "Item 0" in out and "90" in out
-    assert "Item 11" not in out  # beyond max_rows
-    assert "(Showing 10 of 12 rows)" in out
-
-    # dict-of-lists shape
-    df2 = spark.createDataFrame(
-        [(json.dumps({"a": [1, 2], "b": ["x", "y"]}),)], "text string"
-    )
-    out2 = display_table_preview(df2, "text")
-    assert "| a" in out2 and "| x" in out2
-
-    # non-JSON: graceful fallback to the plain column preview
-    df3 = spark.createDataFrame([("plain prose, not json",)], "text string")
-    out3 = display_table_preview(df3, "text")
-    assert "text" in out3 and "plain prose" in out3
-
-
 def test_save_curated_corpus_partitioned_and_pruned(spark, tmp_path):
     """The curated-corpus sink writes per-language partition directories;
     a language-filtered read partition-prunes (PartitionFilters in plan)
@@ -206,35 +110,6 @@ def test_save_curated_corpus_partitioned_and_pruned(spark, tmp_path):
     assert scan.count() == 30
 
 
-def test_curated_sink_keeps_exactly_the_contract_query_rows(spark, tmp_path):
-    """Closing the loop between the oracle-checked sampling queries and the
-    production sink: rows written by save_curated_corpus after
-    curate_corpus must equal the intersection of t_quality_weighted_sample
-    and t_stratified_sample keep-sets on the same table (same salts, same
-    rates)."""
-    from pdf_extractor_spark.queries import all_queries
-    from pdf_extractor_spark.sources.sinks import curate_corpus, save_curated_corpus
-
-    sf = "/root/testdata/sf0.001"
-    qs = all_queries()
-    q_quality = {r["doc_id"] for r in qs["t_quality_weighted_sample"](spark, sf).collect()}
-    q_strat = {r["doc_id"] for r in qs["t_stratified_sample"](spark, sf).collect()}
-    expected = q_quality & q_strat
-    assert expected  # non-trivial keep-set
-
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    path = str(tmp_path / "curated")
-    save_curated_corpus(
-        curate_corpus(docs, rates={"en": 0.1, "de": 0.4}, default_rate=0.8), path
-    )
-    written = {r["doc_id"] for r in spark.read.parquet(path).select("doc_id").collect()}
-    assert written == expected
-    # partition layout: per-language directories exist for written langs
-    import os
-
-    assert any(d.startswith("lang=") for d in os.listdir(path))
-
-
 def test_curation_job_stage_accounting_and_keep_set(spark, tmp_path):
     """The --curate job surface: written rows must equal the independent
     composition of the oracle-checked contract operators (gopher keep ∩
@@ -244,7 +119,6 @@ def test_curation_job_stage_accounting_and_keep_set(spark, tmp_path):
 
     from pdf_extractor_spark.curate import run_curation_job
     from pdf_extractor_spark.queries import all_queries
-    from pdf_extractor_spark.sources.sinks import curate_corpus
 
     sf = "/root/testdata/sf0.001"
     docs = spark.read.parquet(f"{sf}/documents.parquet")
@@ -262,12 +136,11 @@ def test_curation_job_stage_accounting_and_keep_set(spark, tmp_path):
         h = hashlib.md5(by_doc[doc_id].encode()).hexdigest()
         firsts.setdefault(h, doc_id)
     first_ids = set(firsts.values())
+    # the sampling keep: both contract sampling queries, which use the
+    # job's rates ({"en": 0.1, "de": 0.4}, 0.8 otherwise) and salts
     sampled = {
-        r["doc_id"]
-        for r in curate_corpus(
-            docs, rates={"en": 0.1, "de": 0.4}, default_rate=0.8
-        ).select("doc_id").collect()
-    }
+        r["doc_id"] for r in qs["t_quality_weighted_sample"](spark, sf).collect()
+    } & {r["doc_id"] for r in qs["t_stratified_sample"](spark, sf).collect()}
     expected = gopher & first_ids & sampled
     assert expected  # non-trivial
 

@@ -4,10 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import Row, functions as F
 
-from pdf_extractor_spark.functions.statement import (
-    infer_value_types,
-    normalize_statement,
-)
+from pdf_extractor_spark.functions.statement import normalize_statement
 from tests.test_validate import SCHEMA, _item, _meta, _stmt
 
 
@@ -98,15 +95,3 @@ def test_normalized_statement_validates(spark):
     df = spark.createDataFrame([("u1", _stmt())], SCHEMA)
     out = validate_statements(normalize_statement(df)).first()
     assert out["is_valid"] is True
-
-
-def test_infer_value_types(spark):
-    rows = [
-        ("cost", "1,234"), ("cost", "(56)"), ("cost", "n/a-ish"),
-        ("rate", "5%"), ("rate", "6.5 %"),
-        ("when", "2024-12-31"),
-        ("name", "goodwill"), ("name", "123"),  # tie 1-1 -> number wins
-    ]
-    df = spark.createDataFrame(rows, ["col_key", "raw_value"])
-    got = {r["col_key"]: r["value_type"] for r in infer_value_types(df).collect()}
-    assert got == {"cost": "number", "rate": "percent", "when": "date", "name": "number"}

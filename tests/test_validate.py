@@ -1,4 +1,4 @@
-"""Structured-layer tests: statement model, V1 schema validator, V2 round-trip
+"""Structured-layer tests: statement model and V1 schema validator
 (FIXTURES.md §5 cases)."""
 
 from __future__ import annotations
@@ -8,10 +8,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 from pyspark.sql.types import StructField, StructType, StringType
 
-from pdf_extractor_spark.functions.validate import (
-    reconstruction_check,
-    validate_statements,
-)
+from pdf_extractor_spark.functions.validate import validate_statements
 from pdf_extractor_spark.plans.model import STATEMENT
 
 
@@ -160,14 +157,3 @@ def test_ambiguity_warning(spark):
     assert out["is_valid"] is True
     assert out["warnings"] == ["ambiguous extraction noted"]
     assert out["confidence"] == 95
-
-
-def test_reconstruction_check_counts(spark):
-    df = _df(spark, _stmt(sections=[
-        Row(section_name="assets", items=[_item(), _item(label="PP&E")]),
-        Row(section_name="equity", items=[_item(label="Share capital")]),
-    ]))
-    out = reconstruction_check(df).first()
-    assert out["n_sections"] == 2
-    assert out["n_items"] == 3
-    assert out["reconstructable"] is True

@@ -1,10 +1,19 @@
-"""WARC source: codec round-trips, robustness, Spark reader, e2e parity."""
+"""WARC/WET/WAT codecs: round-trips and robustness; CDX line parsing."""
 
 from __future__ import annotations
 
 import datetime
 
 from pdf_extractor_spark.sources import warc as W
+
+
+def _cdx_line(urlkey, ts14, url, mime, status, digest, length):
+    """One CDXJ line with a fixed JSON key order."""
+    js = (
+        '{"url": "%s", "mime": "%s", "status": "%s", "digest": "%s", '
+        '"length": "%d"}' % (url, mime, status, digest, length)
+    )
+    return f"{urlkey} {ts14} {js}"
 
 
 def _recs(n=5):
@@ -64,58 +73,27 @@ def test_warc_skips_garbage_and_truncation():
     assert 0 <= len(rows) < 4
 
 
-def test_read_warc_spark_reader_and_extract_parity(spark, tmp_path):
-    from pdf_extractor_spark.extract.udfs import extract_one
-    from pdf_extractor_spark.fixtures.synth import make_document_row
-    from pdf_extractor_spark.pipeline import extract_documents
-
-    ids = list(range(24))  # includes doc 7 and 17: the PDF slots
-    d = tmp_path / "warcs"
-    d.mkdir()
-    (d / "part-0.warc.gz").write_bytes(W.synth_warc_archive(ids[:12]))
-    (d / "part-1.warc.gz").write_bytes(W.synth_warc_archive(ids[12:]))
-
-    df = W.read_warc(spark, str(d), glob="*.warc.gz", n_partitions=4)
-    rows = {r["url"]: r for r in df.collect()}
-    assert len(rows) == 24
-
-    extracted = {
-        r["url"]: r for r in extract_documents(df, n_partitions=4).collect()
-    }
-    for i in ids:
-        fixture = make_document_row(i)
-        got = rows[fixture["url"]]
-        assert bytes(got["html"]) == fixture["html"]  # byte-identical payload
-        assert got["warc_ts"] == fixture["warc_ts"].replace(tzinfo=None)
-        # end-to-end: extraction through the WARC path == the pure function
-        want_text, *_ = extract_one(fixture["html"])
-        assert extracted[fixture["url"]]["text"] == want_text
-        assert extracted[fixture["url"]]["ok"]
-
-
 def test_cdx_reader_roundtrip_and_surt(spark, tmp_path):
-    """CDX source: lines written by build_cdx_line parse back exactly via
-    read_cdx; SURT canonicalization handles scheme/www/case/no-path."""
-    from pdf_extractor_spark.sources.cdx import (
-        build_cdx_line,
-        read_cdx,
-        surt_urlkey,
-    )
+    """CDX source: a CDXJ file read as text parses back exactly through
+    parse_cdx_lines; SURT canonicalization handles scheme/www/case/no-path."""
+    from pdf_extractor_spark.sources.cdx import parse_cdx_lines, surt_urlkey
     from pyspark.sql import functions as F
 
     lines = [
-        build_cdx_line(
+        _cdx_line(
             "example,docs)/page/1", "20240301101500",
             "https://docs.example/page/1", "text/html", "200", "d" * 32, 512,
         ),
-        build_cdx_line(
+        _cdx_line(
             "org,wiki)/", "20240301101501",
             "https://www.wiki.org/", "text/plain", "404", "e" * 32, 7,
         ),
     ]
     p = tmp_path / "idx.cdx"
     p.write_text("\n".join(lines) + "\n")
-    got = {r["urlkey"]: r for r in read_cdx(spark, str(p)).collect()}
+    got = {
+        r["urlkey"]: r for r in parse_cdx_lines(spark.read.text(str(p))).collect()
+    }
     assert set(got) == {"example,docs)/page/1", "org,wiki)/"}
     r = got["example,docs)/page/1"]
     assert r["url"] == "https://docs.example/page/1"
@@ -145,9 +123,9 @@ def test_cdx_reader_tolerates_malformed_lines(spark, tmp_path):
     """One bad line in an external index must yield nulls, not kill the
     scan (ANSI-safe try_to_timestamp / try_cast): a classic-CDX header
     line and a legacy '\"length\": \"-\"' placeholder both survive."""
-    from pdf_extractor_spark.sources.cdx import build_cdx_line, read_cdx
+    from pdf_extractor_spark.sources.cdx import parse_cdx_lines
 
-    good = build_cdx_line(
+    good = _cdx_line(
         "example,docs)/a", "20240301101500",
         "https://docs.example/a", "text/html", "200", "d" * 32, 9,
     )
@@ -157,7 +135,7 @@ def test_cdx_reader_tolerates_malformed_lines(spark, tmp_path):
               '"length": "-"}')
     p = tmp_path / "mixed.cdx"
     p.write_text("\n".join([header, good, legacy]) + "\n")
-    rows = read_cdx(spark, str(p)).collect()
+    rows = parse_cdx_lines(spark.read.text(str(p))).collect()
     assert len(rows) == 3
     by_key = {r["urlkey"]: r for r in rows}
     ok = by_key["example,docs)/a"]
@@ -218,17 +196,6 @@ def test_wet_rows_skips_non_conversion_records():
     )
     rows = list(W.wet_rows(mixed))
     assert len(rows) == 1 and rows[0]["text"] == "the text"
-
-
-def test_read_wet_spark_reader(spark, tmp_path):
-    recs = _wet_recs(8)
-    p = tmp_path / "a.warc.wet.gz"
-    p.write_bytes(W.build_wet(recs, gzip_members=True, warcinfo_filename="a"))
-    got = W.read_wet(spark, str(tmp_path)).orderBy("url").collect()
-    assert [r["url"] for r in got] == sorted(r[0] for r in recs)
-    by_url = {r[0]: r[2] for r in recs}
-    for r in got:
-        assert r["text"].encode("utf-8") == by_url[r["url"]]
 
 
 def _wat_recs(n=5):
