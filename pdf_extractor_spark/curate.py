@@ -30,9 +30,6 @@ def curation_flags(
     df: DataFrame,
     rates: dict[str, float] | None = None,
     default_rate: float = 1.0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    strata_col: str = "lang",
     n_partitions: int | None = None,
 ) -> DataFrame:
     """Input columns + boolean stage flags (f_gopher, f_first, f_sample).
@@ -53,33 +50,33 @@ def curation_flags(
         repetition_stats,
     )
 
-    rep = repetition_stats(
-        df, id_col, text_col, n_partitions=n_partitions
-    ).select(id_col, gopher_keep_expr().alias("f_gopher"))
+    rep = repetition_stats(df, n_partitions=n_partitions).select(
+        "doc_id", gopher_keep_expr().alias("f_gopher")
+    )
     # LEFT join + false-fill: a zero-token document produces no
     # (id, token) rows, so it is absent from the stats frame — an inner
     # join would silently drop it from rows_in instead of counting it as
     # filtered (observed: 40 empty-text synth docs vanished)
-    flagged = df.join(rep, id_col, "left").withColumn(
+    flagged = df.join(rep, "doc_id", "left").withColumn(
         "f_gopher", F.coalesce(F.col("f_gopher"), F.lit(False))
     )
     firsts = (
         flagged.filter(F.col("f_gopher"))
-        .groupBy(F.md5(F.col(text_col)).alias("_h"))
-        .agg(F.min(F.col(id_col)).alias("_first_id"))
-        .select(F.col("_first_id").alias(id_col))
+        .groupBy(F.md5(F.col("text")).alias("_h"))
+        .agg(F.min(F.col("doc_id")).alias("_first_id"))
+        .select(F.col("_first_id").alias("doc_id"))
         .withColumn("_is_first", F.lit(True))
     )
     # the SAME predicate expressions the oracle-checked contract queries
     # use — shared helpers, not copies, so the --curate surface can never
     # drift from them
-    q_keep = quality_keep_expr(F.col(id_col), F.col(text_col))
+    q_keep = quality_keep_expr(F.col("doc_id"), F.col("text"))
     if rates is not None:
-        rate = stratified_rate_expr(rates, strata_col, default_rate)
-        s_keep = _hash_frac(F.col(id_col), "strat") < rate
+        rate = stratified_rate_expr(rates, "lang", default_rate)
+        s_keep = _hash_frac(F.col("doc_id"), "strat") < rate
     else:
         s_keep = F.lit(True)
-    return flagged.join(firsts, id_col, "left").select(
+    return flagged.join(firsts, "doc_id", "left").select(
         *df.columns,
         "f_gopher",
         F.coalesce(F.col("_is_first"), F.lit(False)).alias("f_first"),
@@ -94,7 +91,6 @@ def run_curation_job(
     rates: dict[str, float] | None = None,
     default_rate: float = 1.0,
     n_partitions: int | None = None,
-    partition_cols: tuple[str, ...] = ("lang",),
 ) -> dict:
     """Filter -> dedup -> sample -> partitioned corpus write; returns the
     stage-accounting metrics dict (one aggregation, then one write)."""
@@ -121,7 +117,7 @@ def run_curation_job(
     kept = flags.filter(
         F.col("f_gopher") & F.col("f_first") & F.col("f_sample")
     ).drop("f_gopher", "f_first", "f_sample")
-    save_curated_corpus(kept, output_path, partition_cols=partition_cols)
+    save_curated_corpus(kept, output_path)
     return {
         "rows_in": row["rows_in"],
         "after_filter": row["after_filter"],

@@ -78,8 +78,6 @@ for _t in _BOILERPLATE_ANCESTORS:
     _TAG_FLAGS[_t] = _TAG_FLAGS.get(_t, 0) | 8
 _TAG_FLAGS["a"] = _TAG_FLAGS.get("a", 0) | 16
 
-_WS_RE = re.compile(r"\s+")
-
 # Classification thresholds (Boilerpipe-class defaults).
 MIN_CONTENT_CHARS = 25
 MAX_LINK_DENSITY = 0.33
@@ -100,8 +98,6 @@ class ExtractContext:
 
     min_content_chars: int = MIN_CONTENT_CHARS
     max_link_density: float = MAX_LINK_DENSITY
-    min_heading_chars: int = MIN_HEADING_CHARS
-    short_block_min_chars: int = SHORT_BLOCK_MIN_CHARS
 
 
 DEFAULT_CONTEXT = ExtractContext()
@@ -236,7 +232,7 @@ def tokenize(source: str) -> list[tuple[str, str, str, int, int]]:
 
 
 def _normalize_ws(s: str) -> str:
-    # identical to _WS_RE.sub(" ", s).strip() (str.split() splits on the
+    # identical to re.sub(r"\s+", " ", s).strip() (str.split() splits on the
     # same unicode whitespace set \s matches) but ~3x faster — this is the
     # hottest scalar in the HTML path. NOTE: _assemble_blocks.flush()
     # inlines this expression; a semantic change here must be mirrored
@@ -453,7 +449,7 @@ def _classify(blocks: list[_Block], ctx: ExtractContext = DEFAULT_CONTEXT) -> li
                 not keep[i]
                 and not b.path_flags
                 and b.tag in _HEADING_TAGS
-                and n_chars[i] >= ctx.min_heading_chars
+                and n_chars[i] >= MIN_HEADING_CHARS
                 and link_density[i] <= ctx.max_link_density
             ):
                 keep[i] = True
@@ -467,7 +463,7 @@ def _classify(blocks: list[_Block], ctx: ExtractContext = DEFAULT_CONTEXT) -> li
             and keep[i + 1]
             and not blocks[i].path_flags
             and blocks[i].anchor_chars == 0
-            and n_chars[i] >= ctx.short_block_min_chars
+            and n_chars[i] >= SHORT_BLOCK_MIN_CHARS
         ):
             keep[i] = True
     return keep

@@ -58,7 +58,6 @@ DEFAULT_PAGE_W = 612.0
 DEFAULT_PAGE_H = 792.0
 MARGIN_BAND = 50.0  # lines within this distance of top/bottom edge = header/footer
 LINE_Y_TOL = 2.0  # runs within this y-distance share a text line
-COLUMN_MIN_GUTTER_FRAC = 0.22  # min gutter (fraction of page width) to split columns
 BLOCK_GAP_FACTOR = 1.6  # line gap > factor*median gap starts a new block
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")

@@ -191,9 +191,7 @@ def make_extract_udf(context: ExtractContext | None = None):
         """
         prepare_worker()
         rows = [extract_one(p, ctx) for p in payload]
-        return pd.DataFrame(
-            rows, columns=["text", "spans", "n_blocks", "kind", "ok", "error"]
-        )
+        return pd.DataFrame(rows, columns=EXTRACT_RESULT_SCHEMA.fieldNames())
 
     return _extract_udf
 

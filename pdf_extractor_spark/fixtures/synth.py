@@ -68,9 +68,8 @@ def _sentence(rng: random.Random, lang: str) -> str:
     return s[0].upper() + s[1:] + "."
 
 
-def _paragraph(rng: random.Random, lang: str, n_sentences: int | None = None) -> str:
-    k = n_sentences or rng.randint(2, 5)
-    return " ".join(_sentence(rng, lang) for _ in range(k))
+def _paragraph(rng: random.Random, lang: str) -> str:
+    return " ".join(_sentence(rng, lang) for _ in range(rng.randint(2, 5)))
 
 
 # --- HTML synthesis -----------------------------------------------------------
@@ -329,5 +328,5 @@ def make_document_row(doc_id: int, seed: int = 42, scale: int = 1) -> dict:
     }
 
 
-def synth_corpus(n: int, seed: int = 42) -> list[dict]:
-    return [make_document_row(i, seed) for i in range(n)]
+def synth_corpus(n: int) -> list[dict]:
+    return [make_document_row(i) for i in range(n)]

@@ -76,9 +76,9 @@ def _normalize_item(item: Column, pos: Column, meta: Column) -> Column:
     )
 
 
-def normalize_statement(df: DataFrame, stmt_col: str = "statement") -> DataFrame:
+def normalize_statement(df: DataFrame) -> DataFrame:
     """Apply the full normalization pass; adds an ``axis`` column (F17)."""
-    stmt = F.col(stmt_col)
+    stmt = F.col("statement")
     meta = stmt.getField("metadata")
 
     sections = F.transform(
@@ -111,7 +111,7 @@ def normalize_statement(df: DataFrame, stmt_col: str = "statement") -> DataFrame
         1,
     )
     has_columns = F.coalesce(F.size(meta.getField("columns")), F.lit(0)) > 0
-    return df.withColumn(stmt_col, normalized).withColumn(
+    return df.withColumn("statement", normalized).withColumn(
         "axis",
         N.infer_axis(
             F.coalesce(

@@ -126,9 +126,9 @@ def statement_warnings(stmt: Column) -> Column:
     )
 
 
-def validate_statements(df: DataFrame, stmt_col: str = "statement") -> DataFrame:
+def validate_statements(df: DataFrame) -> DataFrame:
     """V1 as a pure select: append errors/warnings/is_valid/confidence."""
-    stmt = F.col(stmt_col)
+    stmt = F.col("statement")
     errs = statement_errors(stmt)
     warns = statement_warnings(stmt)
     return (

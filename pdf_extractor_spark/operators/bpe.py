@@ -70,8 +70,6 @@ def _adjacent_pairs(syms_str: F.Column) -> F.Column:
 def bpe_train(
     word_freq: DataFrame,
     n_merges: int,
-    word_col: str = "word",
-    freq_col: str = "freq",
 ) -> tuple[DataFrame, list[tuple[str, str]]]:
     """Run ``n_merges`` BPE rounds over a (word, freq) table.
 
@@ -81,9 +79,9 @@ def bpe_train(
     (freq DESC, a ASC, b ASC) — deterministic in any engine.
     """
     cur = word_freq.select(
-        F.col(word_col).alias("word"),
-        F.col(freq_col).cast("long").alias("freq"),
-        init_symbols(F.col(word_col)).alias("_syms"),
+        F.col("word"),
+        F.col("freq").cast("long").alias("freq"),
+        init_symbols(F.col("word")).alias("_syms"),
     ).localCheckpoint()
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
@@ -120,12 +118,12 @@ def bpe_train(
 
 
 def word_frequencies(
-    df: DataFrame, text_col: str = "text", n_partitions: int | None = None
+    df: DataFrame, n_partitions: int | None = None
 ) -> DataFrame:
     """(word, freq) over the corpus — the one corpus-wide scan BPE needs."""
     from pdf_extractor_spark.operators.dedup import word_tokens
 
-    staged = df.select(word_tokens(F.col(text_col)).alias("_t"))
+    staged = df.select(word_tokens(F.col("text")).alias("_t"))
     if n_partitions:
         staged = staged.repartition(n_partitions)
     return (

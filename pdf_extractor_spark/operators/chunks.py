@@ -15,11 +15,9 @@ from pyspark.sql import DataFrame, functions as F
 def reassemble_chunks(
     df: DataFrame,
     key_col: str = "url",
-    chunk_col: str = "chunk_id",
-    text_col: str = "chunk_text",
 ) -> DataFrame:
     """(key, chunk_id, text) rows -> (key, text, n_chunks)."""
-    pair = F.struct(F.col(chunk_col).alias("i"), F.col(text_col).alias("t"))
+    pair = F.struct(F.col("chunk_id").alias("i"), F.col("chunk_text").alias("t"))
     return df.groupBy(key_col).agg(
         F.array_join(
             F.transform(
@@ -33,8 +31,6 @@ def reassemble_chunks(
 
 def chunk_for_training(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     chunk_tokens: int = 64,
     overlap: int = 16,
     n_partitions: int | None = None,
@@ -57,7 +53,7 @@ def chunk_for_training(
     assert 0 < overlap < chunk_tokens
     step = chunk_tokens - overlap
     staged = df.select(
-        F.col(id_col).alias("id"), word_tokens(F.col(text_col)).alias("_t")
+        F.col("doc_id").alias("id"), word_tokens(F.col("text")).alias("_t")
     )
     if n_partitions:
         staged = staged.repartition(n_partitions, "id")

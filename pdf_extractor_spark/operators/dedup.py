@@ -131,8 +131,6 @@ def with_minhash_bands(
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = DEFAULT_MINHASH_K,
     bands: int = DEFAULT_BANDS,
     shingle_n: int = 3,
@@ -157,7 +155,9 @@ def minhash_lsh_pairs(
     datasketch MinHashLSH's and BigQuery's bucket caps).
     """
     banded = _drop_hot_buckets(
-        with_minhash_bands(df, id_col, text_col, k, bands, shingle_n, n_partitions),
+        with_minhash_bands(
+            df, k=k, bands=bands, shingle_n=shingle_n, n_partitions=n_partitions
+        ),
         max_bucket,
     )
     a = banded.alias("a")
@@ -248,8 +248,6 @@ def _jaccard_at_least(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     group_col: str | None = None,
     shingle_n: int = 2,
     threshold: float = 0.5,
@@ -270,7 +268,7 @@ def ngram_jaccard_pairs(
     # (grp has few values); the join adds its own grp exchange, which both
     # sides share (ReusedExchange)
     sh = _shingle_sets(
-        df, id_col, text_col, shingle_n, n_partitions,
+        df, "doc_id", "text", shingle_n, n_partitions,
         (F.col(group_col) if group_col else F.lit(1)).alias("grp"),
     )
     if shards is None:  # the salt spreads work only; output shard-invariant
@@ -299,8 +297,6 @@ def ngram_jaccard_pairs(
 
 def lsh_verified_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = DEFAULT_MINHASH_K,
     bands: int = DEFAULT_BANDS,
     shingle_n: int = 3,
@@ -320,9 +316,9 @@ def lsh_verified_pairs(
     on candidates. Returns (id_a, id_b, jaccard) with jaccard >= threshold.
     """
     pairs = minhash_lsh_pairs(
-        df, id_col, text_col, k, bands, shingle_n, n_partitions
+        df, k=k, bands=bands, shingle_n=shingle_n, n_partitions=n_partitions
     )
-    sh = _shingle_sets(df, id_col, text_col, shingle_n, n_partitions)
+    sh = _shingle_sets(df, "doc_id", "text", shingle_n, n_partitions)
     sa, sb = sh.alias("sa"), sh.alias("sb")
     joined = pairs.join(sa, pairs["id_a"] == F.col("sa.id")).join(
         sb, pairs["id_b"] == F.col("sb.id")
@@ -342,7 +338,6 @@ def incremental_near_dups(
     shingle_n: int = 3,
     threshold: float = 0.5,
     n_partitions: int | None = None,
-    max_bucket: int | None = None,
     corpus_band_index: DataFrame | None = None,
 ) -> DataFrame:
     """Dedupe a NEW crawl batch against an EXISTING corpus — the
@@ -356,9 +351,7 @@ def incremental_near_dups(
     inner equi-join on (band, key) — new side is the small probe, so at
     real scale the corpus side is the pre-bucketed/bucket-sorted table and
     the join shuffles ONLY the batch; exact Jaccard verification runs on
-    candidates alone, shingles per side materialized once. ``max_bucket``
-    drops degenerate corpus buckets (boilerplate clusters) BEFORE pair
-    generation — same skew guard as ``minhash_lsh_pairs``.
+    candidates alone, shingles per side materialized once.
 
     Returns (new_id, corpus_id, jaccard >= threshold): every new doc that
     near-duplicates an existing corpus doc, with the match.
@@ -377,13 +370,12 @@ def incremental_near_dups(
     banded_new = with_minhash_bands(
         new_df, id_col, text_col, k, bands, shingle_n, n_partitions
     )
-    banded_corpus = _drop_hot_buckets(
+    banded_corpus = (
         corpus_band_index
         if corpus_band_index is not None
         else with_minhash_bands(
             corpus_df, id_col, text_col, k, bands, shingle_n, n_partitions
-        ),
-        max_bucket,
+        )
     )
     pairs = (
         banded_new.alias("n")
@@ -412,42 +404,8 @@ def _hex_nibble(c: Column) -> Column:
     return F.position(c, F.lit("0123456789abcdef")) - 1
 
 
-def simhash(col: Column, bits: int = SIMHASH_BITS) -> Column:
-    """SimHash over word tokens, ``bits`` wide (<=16: first 4 md5 hex chars).
-
-    bit j of the result = majority vote of bit j across token md5 hashes.
-    Pure expression (transform/aggregate) — runs in codegen, and is
-    reproducible in SQL via the same strpos arithmetic.
-    """
-    toks = word_tokens(col)
-    # per-token 16-bit hash from the first 4 md5 hex chars
-    h16 = F.transform(
-        toks,
-        lambda t: (
-            _hex_nibble(F.substring(F.md5(t), 1, 1)) * 4096
-            + _hex_nibble(F.substring(F.md5(t), 2, 1)) * 256
-            + _hex_nibble(F.substring(F.md5(t), 3, 1)) * 16
-            + _hex_nibble(F.substring(F.md5(t), 4, 1))
-        ),
-    )
-    def _votes(j: int) -> Column:
-        def merge(acc: Column, h: Column) -> Column:
-            return acc + F.when(
-                F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, 1
-            ).otherwise(-1)
-
-        return F.aggregate(h16, F.lit(0), merge)
-
-    out = F.lit(0)
-    for j in range(bits):
-        out = out + F.when(_votes(j) > 0, F.lit(2**j)).otherwise(F.lit(0))
-    return F.when(F.size(toks) == 0, F.lit(0)).otherwise(out)
-
-
 def with_simhash(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     bits: int = SIMHASH_BITS,
     n_partitions: int | None = None,
     hex_chars: int = 4,
@@ -461,7 +419,7 @@ def with_simhash(
     intermediate fits a long). ``bits`` must be <= 4*hex_chars.
     """
     staged = df.select(
-        F.col(id_col).alias("id"), word_tokens(F.col(text_col)).alias("_t")
+        F.col("doc_id").alias("id"), word_tokens(F.col("text")).alias("_t")
     )
     if n_partitions:
         staged = staged.repartition(n_partitions, "id")
@@ -500,8 +458,6 @@ def with_simhash(
 
 def simhash_near_dup_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     bits: int = 48,
     n_chunks: int = 4,
     hamming_max: int = 3,
@@ -517,8 +473,7 @@ def simhash_near_dup_pairs(
     Returns (id_a, id_b, hamming) with hamming <= hamming_max.
     """
     sh = with_simhash(
-        df, id_col, text_col, bits=bits, n_partitions=n_partitions,
-        hex_chars=(bits + 3) // 4,
+        df, bits=bits, n_partitions=n_partitions, hex_chars=(bits + 3) // 4
     )
     return signature_near_dup_pairs(
         sh, sig_col="simhash", bits=bits, n_chunks=n_chunks,
@@ -580,13 +535,10 @@ def signature_near_dup_pairs(
 
 def token_segments(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     seg_tokens: int = 12,
-    extra_cols: tuple[str, ...] = (),
     n_partitions: int | None = None,
 ) -> DataFrame:
-    """Fixed-token-window segmentation -> (id, <extra_cols>, idx, seg_text).
+    """Fixed-token-window segmentation -> (id, idx, seg_text).
 
     The segment source for line/paragraph-level dedup when the corpus has
     no natural line structure (or for language-agnostic windows). Staged
@@ -594,9 +546,7 @@ def token_segments(
     re-evaluate full expression trees per element), then one posexplode —
     embarrassingly parallel."""
     staged = df.select(
-        F.col(id_col).alias("id"),
-        *[F.col(c) for c in extra_cols],
-        word_tokens(F.col(text_col)).alias("_t"),
+        F.col("doc_id").alias("id"), word_tokens(F.col("text")).alias("_t")
     )
     if n_partitions:
         staged = staged.repartition(n_partitions, "id")
@@ -611,9 +561,7 @@ def token_segments(
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    return staged.select(
-        "id", *extra_cols, F.posexplode(segs).alias("idx", "seg_text")
-    )
+    return staged.select("id", F.posexplode(segs).alias("idx", "seg_text"))
 
 
 def line_segments(
@@ -707,7 +655,7 @@ def paragraph_dedup_stats(segs: DataFrame) -> DataFrame:
     )
 
 
-def paragraph_dedup_rewrite(segs: DataFrame, joiner: str = " ") -> DataFrame:
+def paragraph_dedup_rewrite(segs: DataFrame) -> DataFrame:
     """Paragraph-level exact dedup REMOVAL (Lee et al. ACL 2022 applied,
     not just counted): every segment occurrence that is not the
     corpus-wide first occurrence of its content is CUT, and each document
@@ -743,16 +691,13 @@ def paragraph_dedup_rewrite(segs: DataFrame, joiner: str = " ") -> DataFrame:
         "n_paragraphs",
         "n_kept",
         F.concat_ws(
-            joiner, F.transform(F.col("_kept"), lambda s: s.getField("seg_text"))
+            " ", F.transform(F.col("_kept"), lambda s: s.getField("seg_text"))
         ).alias("clean_text"),
     )
 
 
 def decontaminate(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    eval_col: str = "is_eval",
     shingle_n: int = 5,
     df_max: int | None = None,
     n_partitions: int | None = None,
@@ -773,9 +718,9 @@ def decontaminate(
       cardinality estimates are too unreliable to leave the choice to stats.
     """
     staged = df.select(
-        F.col(id_col).alias("id"),
-        F.col(eval_col).alias("is_eval"),
-        word_tokens(F.col(text_col)).alias("_t"),
+        F.col("doc_id").alias("id"),
+        F.col("is_eval"),
+        word_tokens(F.col("text")).alias("_t"),
     )
     if n_partitions:
         staged = staged.repartition(n_partitions, "id")
@@ -807,22 +752,14 @@ def decontaminate(
     )
 
 
-def exact_duplicates(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", normalized: bool = False
-) -> DataFrame:
+def exact_duplicates(df: DataFrame) -> DataFrame:
     """Exact-dup groups: hash key, keep-first representative, member count.
 
-    ``normalized=True`` uses the punctuation/case-insensitive fingerprint.
     Map-side partial aggregation makes this one shuffle of (hash, id).
     """
-    if normalized:
-        from pdf_extractor_spark.operators.textstats import content_fingerprint
-
-        key = content_fingerprint(F.col(text_col))
-    else:
-        key = F.md5(F.encode(F.col(text_col), "UTF-8"))
+    key = F.md5(F.encode(F.col("text"), "UTF-8"))
     return (
-        df.select(key.alias("text_hash"), F.col(id_col).alias("id"))
+        df.select(key.alias("text_hash"), F.col("doc_id").alias("id"))
         .groupBy("text_hash")
         .agg(
             F.min("id").alias("keep_id"),
@@ -1003,8 +940,6 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 def connected_components_star(
     edges: DataFrame,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
     max_iter: int = 25,
 ) -> DataFrame:
     """Connected components by alternating large-star/small-star rounds
@@ -1026,7 +961,7 @@ def connected_components_star(
     # from it, and without the checkpoint each would re-execute the full
     # upstream plan (e.g. the minhash-LSH candidate pipeline)
     raw = edges.select(
-        F.col(src_col).cast("long").alias("a"), F.col(dst_col).cast("long").alias("b")
+        F.col("id_a").cast("long").alias("a"), F.col("id_b").cast("long").alias("b")
     ).localCheckpoint()
     all_nodes = (
         raw.select(F.col("a").alias("node"))
@@ -1096,15 +1031,13 @@ def connected_components_star(
 def _window_hashes(
     df: DataFrame,
     min_tokens: int,
-    id_col: str,
-    text_col: str,
     n_partitions: int | None,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared stage of the ExactSubstr operators: staged tokens behind a
     repartition barrier, plus the exploded (id, pos, h) window-hash frame
     (md5 of each ``min_tokens``-token window). Returns (staged, win)."""
     staged = df.select(
-        F.col(id_col).alias("id"), word_tokens(F.col(text_col)).alias("_t")
+        F.col("doc_id").alias("id"), word_tokens(F.col("text")).alias("_t")
     )
     if n_partitions:
         staged = staged.repartition(n_partitions, "id")
@@ -1148,8 +1081,6 @@ def _merge_islands(marked: DataFrame, min_tokens: int) -> DataFrame:
 def duplicate_token_spans(
     df: DataFrame,
     min_tokens: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_partitions: int | None = None,
 ) -> DataFrame:
     """ExactSubstr-style duplicate span detection (Lee et al., ACL 2022,
@@ -1171,13 +1102,11 @@ def duplicate_token_spans(
     size) -> one groupBy(doc, island). All integer/md5 arithmetic —
     bit-stable across engines and partitionings.
 
-    Returns (id_col, span_start, span_end, span_tokens, n_windows), one
+    Returns (doc_id, span_start, span_end, span_tokens, n_windows), one
     row per maximal duplicated span; token positions are 0-based and
     end-inclusive.
     """
-    _staged, win = _window_hashes(
-        df, min_tokens, id_col, text_col, n_partitions
-    )
+    _staged, win = _window_hashes(df, min_tokens, n_partitions)
     dup_h = (
         win.groupBy("h")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -1186,7 +1115,7 @@ def duplicate_token_spans(
     )
     marked = win.join(dup_h, "h").select("id", "pos")
     return _merge_islands(marked, min_tokens).select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         F.col("s").cast("long").alias("span_start"),
         F.col("e").cast("long").alias("span_end"),
         (F.col("e") - F.col("s") + 1).cast("long").alias("span_tokens"),
@@ -1197,8 +1126,6 @@ def duplicate_token_spans(
 def exact_substr_rewrite(
     df: DataFrame,
     min_tokens: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_partitions: int | None = None,
 ) -> DataFrame:
     """ExactSubstr dedup as a REWRITE (Lee et al., ACL 2022): the tokens
@@ -1217,11 +1144,9 @@ def exact_substr_rewrite(
     pattern). All integer/md5/struct-min arithmetic, bit-stable across
     engines.
 
-    Returns (id_col, n_tokens, n_removed, clean_text) for every input row.
+    Returns (doc_id, n_tokens, n_removed, clean_text) for every input row.
     """
-    staged, win = _window_hashes(
-        df, min_tokens, id_col, text_col, n_partitions
-    )
+    staged, win = _window_hashes(df, min_tokens, n_partitions)
     firsts = win.groupBy("h").agg(
         F.count(F.lit(1)).alias("c"),
         F.min(F.struct(F.col("id"), F.col("pos"))).alias("first"),
@@ -1261,7 +1186,7 @@ def exact_substr_rewrite(
         staged.select("id", F.size("_t").cast("long").alias("n_tokens"))
         .join(agg, "id", "left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             "n_tokens",
             (F.col("n_tokens") - F.coalesce(F.col("n_kept"), F.lit(0)))
             .cast("long")

@@ -6,8 +6,8 @@ over the host graph (Page et al. 1999; Common Crawl publishes exactly such
 host-level rank files). This module implements it Spark-first with INTEGER
 arithmetic throughout:
 
-``pagerank_integer`` works in fixed-point "rank units" (``scale`` total
-mass). Every step — per-edge contribution ``rank DIV out_degree``,
+``pagerank_integer`` works in fixed-point "rank units" (``PAGERANK_SCALE``
+total mass). Every step — per-edge contribution ``rank DIV out_degree``,
 dangling-mass redistribution ``D DIV n``, damping ``85·x DIV 100`` — is
 integer division, so the result is bit-identical across engines,
 partitionings, and summation orders (the repo's oracle rule: no float
@@ -30,30 +30,30 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+PAGERANK_SCALE = 1_000_000_000  # total rank mass, in integer rank units
+DAMPING_PCT = 85  # PageRank damping d, in percent
+HITS_SCALE = 1_000_000  # hub and authority mass after each normalization
+
 
 def pagerank_integer(
     edges: DataFrame,
     n_iter: int = 3,
-    scale: int = 1_000_000_000,
-    damping_pct: int = 85,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
-    """Fixed-point PageRank -> (node, rank) with sum(rank) ~= ``scale``.
+    """Fixed-point PageRank -> (node, rank) with sum(rank) ~= ``PAGERANK_SCALE``.
 
-    rank_0(v)   = scale DIV n
+    rank_0(v)   = PAGERANK_SCALE DIV n
     contrib(u→v) = rank_i(u) DIV outdeg(u)
-    rank_{i+1}(v) = (100-d)·(scale DIV n) DIV 100
+    rank_{i+1}(v) = (100-d)·(PAGERANK_SCALE DIV n) DIV 100
                     + d·(Σ contrib(·→v) + dangling DIV n) DIV 100
 
-    where ``dangling`` is the total rank of nodes with no out-edges.
+    where d = ``DAMPING_PCT`` and ``dangling`` is the total rank of nodes with no out-edges.
     Self-loops and duplicate edges are dropped first (standard for host
     graphs); every node appearing as src or dst gets a row.
     """
     e = (
         edges.select(
-            F.col(src_col).cast("long").alias("src"),
-            F.col(dst_col).cast("long").alias("dst"),
+            F.col("src").cast("long").alias("src"),
+            F.col("dst").cast("long").alias("dst"),
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
@@ -75,8 +75,8 @@ def pagerank_integer(
         .select("node", F.coalesce("outdeg", F.lit(0)).cast("long").alias("outdeg"))
         .localCheckpoint()
     )
-    init = scale // n
-    base = (100 - damping_pct) * init // 100
+    init = PAGERANK_SCALE // n
+    base = (100 - DAMPING_PCT) * init // 100
     ranks = deg.select("node", F.lit(init).cast("long").alias("rank"), "outdeg")
     for _ in range(n_iter):
         dangling = (
@@ -104,7 +104,7 @@ def pagerank_integer(
                 (
                     F.lit(base).cast("long")
                     + F.expr(
-                        f"(CAST({damping_pct} AS BIGINT) * "
+                        f"(CAST({DAMPING_PCT} AS BIGINT) * "
                         f"(in_sum + CAST({share} AS BIGINT))) DIV 100"
                     )
                 ).cast("long").alias("rank"),
@@ -118,9 +118,6 @@ def pagerank_integer(
 def hits_integer(
     edges: DataFrame,
     n_iter: int = 2,
-    scale: int = 1_000_000,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """Fixed-point HITS (Kleinberg, JACM 1999) -> (node, hub, auth).
 
@@ -128,8 +125,10 @@ def hits_integer(
     many good hubs point AT (fetch these), hubs are pages that point at
     many good authorities (mine these for outlinks). Per iteration:
 
-      auth_raw(v) = Σ_{u→v} hub(u);   auth(v) = scale·auth_raw(v) DIV Σ auth_raw
-      hub_raw(u)  = Σ_{u→v} auth(v);  hub(u)  = scale·hub_raw(u)  DIV Σ hub_raw
+      auth_raw(v) = Σ_{u→v} hub(u);   auth(v) = S·auth_raw(v) DIV Σ auth_raw
+      hub_raw(u)  = Σ_{u→v} auth(v);  hub(u)  = S·hub_raw(u)  DIV Σ hub_raw
+
+    with S = ``HITS_SCALE``.
 
     i.e. the standard mutual-reinforcement update with L1 (mass)
     normalization done in integer rank units — every step is integer
@@ -144,8 +143,8 @@ def hits_integer(
     """
     e = (
         edges.select(
-            F.col(src_col).cast("long").alias("src"),
-            F.col(dst_col).cast("long").alias("dst"),
+            F.col("src").cast("long").alias("src"),
+            F.col("dst").cast("long").alias("dst"),
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
@@ -164,7 +163,7 @@ def hits_integer(
             F.lit(0).cast("long").alias("hub"),
             F.lit(0).cast("long").alias("auth"),
         )
-    hub = nodes.select("node", F.lit(scale // n).cast("long").alias("hub"))
+    hub = nodes.select("node", F.lit(HITS_SCALE // n).cast("long").alias("hub"))
     auth = None
 
     def _normalized(raw: DataFrame, out_col: str) -> DataFrame:
@@ -177,7 +176,7 @@ def hits_integer(
             score = F.lit(0).cast("long")
         else:
             score = F.expr(
-                f"(CAST({scale} AS BIGINT) * coalesce(raw, 0)) DIV {total}"
+                f"(CAST({HITS_SCALE} AS BIGINT) * coalesce(raw, 0)) DIV {total}"
             ).cast("long")
         return joined.select("node", score.alias(out_col)).localCheckpoint(
             eager=False
@@ -203,8 +202,6 @@ def hits_integer(
 
 def triangle_count(
     edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """Per-node triangle count + local clustering coefficient over an
     undirected edge list -> (node, degree, triangles, clustering_ppm).
@@ -231,8 +228,8 @@ def triangle_count(
     per-node attribution. clustering_ppm = 1e6 * 2T / (deg*(deg-1)) in
     integer division (0 where deg < 2) — exact on both engines.
     """
-    lo = F.least(F.col(src_col).cast("long"), F.col(dst_col).cast("long"))
-    hi = F.greatest(F.col(src_col).cast("long"), F.col(dst_col).cast("long"))
+    lo = F.least(F.col("src").cast("long"), F.col("dst").cast("long"))
+    hi = F.greatest(F.col("src").cast("long"), F.col("dst").cast("long"))
     und = (
         edges.select(lo.alias("a"), hi.alias("b"))
         .filter(F.col("a") != F.col("b"))
@@ -362,8 +359,6 @@ def kcore_decompose(
     edges: DataFrame,
     k: int = 3,
     rounds: int = 8,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """k-core decomposition by parallel peeling (Matula & Beck 1983;
     distributed form per Montresor et al. 2013) ->
@@ -394,8 +389,8 @@ def kcore_decompose(
     False) truncates lineage per round — one scheduled job per round, the
     connected-components discipline (dedup.connected_components_star).
     """
-    lo = F.least(F.col(src_col).cast("long"), F.col(dst_col).cast("long"))
-    hi = F.greatest(F.col(src_col).cast("long"), F.col(dst_col).cast("long"))
+    lo = F.least(F.col("src").cast("long"), F.col("dst").cast("long"))
+    hi = F.greatest(F.col("src").cast("long"), F.col("dst").cast("long"))
     und = (
         edges.select(lo.alias("a"), hi.alias("b"))
         .filter(F.col("a") != F.col("b"))

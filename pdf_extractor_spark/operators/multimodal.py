@@ -21,23 +21,10 @@ from pyspark.sql.types import (
     ArrayType,
     BooleanType,
     FloatType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("media_type", StringType()),  # image|audio|video
-        StructField("payload", StringType()),  # set by caller as binary
-        StructField("mime", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("duration_ms", LongType()),
-    ]
 )
 
 FEATURE_DIM = 16
@@ -79,10 +66,7 @@ def _fake_features(payload: bytes) -> list[float]:
 
 def extract_image_features(
     df: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
     fake: bool = False,
-    batch_size_hint: int = 256,
 ) -> DataFrame:
     """Decode + feature-extract via mapInPandas (Arrow-batched, no per-row
     Python on the Spark side). At scale, repartition upstream so each task
@@ -91,7 +75,7 @@ def extract_image_features(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for media_id, payload in zip(pdf[id_col], pdf[payload_col]):
+            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
                 payload = bytes(payload) if payload is not None else b""
                 try:
                     feats = (
@@ -144,8 +128,6 @@ def _decode_audio_real(payload: bytes):  # pragma: no cover - needs codec libs
 
 def extract_audio_features(
     df: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
     fake: bool = False,
 ) -> DataFrame:
     """Audio half of the multimodal triad: same mapInPandas plumbing as
@@ -159,7 +141,7 @@ def extract_audio_features(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for media_id, payload in zip(pdf[id_col], pdf[payload_col]):
+            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
                 payload = bytes(payload) if payload is not None else b""
                 try:
                     feats = (
@@ -244,22 +226,20 @@ def _block_mean_resize(gray, out: int = 32):
     return res
 
 
-def phash_from_gray(gray, bits: int = PHASH_BITS) -> int:
+def phash_from_gray(gray) -> int:
     """Perceptual hash of a grayscale pixel matrix — the REAL pHash math
     (this part is fully implemented and unit-tested; only the bytes->pixels
     codec is stubbed in this container): block-mean resize to 32x32, 2-D
     DCT-II, keep the top-left 8x8 low-frequency block, drop the DC term,
     bit j = (coefficient j > median of the kept coefficients). Nearby
     images (small pixel perturbations) flip few bits; unrelated images
-    differ in ~bits/2.
+    differ in ~PHASH_BITS/2.
     """
     import numpy as np
 
-    if bits > 63:
-        raise ValueError("phash must fit a signed long")
     d = _dct_matrix(32)
     coef = d @ _block_mean_resize(gray, 32) @ d.T
-    low = coef[:8, :8].flatten()[1 : 1 + bits]  # skip DC
+    low = coef[:8, :8].flatten()[1 : 1 + PHASH_BITS]  # skip DC
     med = float(np.median(low))
     out = 0
     for j, v in enumerate(low):
@@ -268,24 +248,20 @@ def phash_from_gray(gray, bits: int = PHASH_BITS) -> int:
     return out
 
 
-def _fake_phash(payload: bytes, bits: int = PHASH_BITS) -> int:
+def _fake_phash(payload: bytes) -> int:
     """Deterministic stand-in signature for the no-codec environment:
-    the first bits/4 md5 hex nibbles of b'phash:' + payload. NOT
+    the first PHASH_BITS/4 md5 hex nibbles of b'phash:' + payload. NOT
     locality-sensitive over bytes (only byte-identical payloads collide)
     — it exercises the distributed plumbing and the chunk-blocked pair
     join, and the oracle reproduces it with strpos nibble arithmetic."""
-    assert bits % 4 == 0
     return int(
-        hashlib.md5(b"phash:" + payload).hexdigest()[: bits // 4], 16
+        hashlib.md5(b"phash:" + payload).hexdigest()[: PHASH_BITS // 4], 16
     )
 
 
 def extract_phash(
     df: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
     fake: bool = False,
-    bits: int = PHASH_BITS,
 ) -> DataFrame:
     """Decode + perceptual-hash via mapInPandas -> (media_id, phash,
     decode_ok, error). Real path: codec -> gray matrix -> phash_from_gray
@@ -295,13 +271,13 @@ def extract_phash(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for media_id, payload in zip(pdf[id_col], pdf[payload_col]):
+            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
                 payload = bytes(payload) if payload is not None else b""
                 try:
                     ph = (
-                        _fake_phash(payload, bits)
+                        _fake_phash(payload)
                         if fake
-                        else phash_from_gray(_decode_image_real(payload), bits)
+                        else phash_from_gray(_decode_image_real(payload))
                     )
                     rows.append((int(media_id), ph, True, None))
                 except Exception as exc:
@@ -316,7 +292,7 @@ def extract_phash(
 
 
 def frame_sample_plan(
-    df: DataFrame, every_ms: int = 1000, duration_col: str = "duration_ms"
+    df: DataFrame, every_ms: int = 1000
 ) -> DataFrame:
     """Video frame-sampling PLAN: one row per sampled frame timestamp.
 
@@ -327,7 +303,7 @@ def frame_sample_plan(
         F.explode(
             F.sequence(
                 F.lit(0),
-                F.greatest(F.coalesce(F.col(duration_col), F.lit(0)) - 1, F.lit(0)),
+                F.greatest(F.coalesce(F.col("duration_ms"), F.lit(0)) - 1, F.lit(0)),
                 F.lit(every_ms),
             )
         ),

@@ -75,24 +75,22 @@ def bm25_topk(
     df: DataFrame,
     queries: list[tuple[str, tuple[str, ...]]],
     k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_partitions: int | None = None,
 ) -> DataFrame:
     """Top-k documents per query under BM25 with rational idf.
 
     Returns (query_id, doc_id, score) — ``score`` rounded to 6 dp, ties
-    at the k boundary broken by ascending ``id_col`` (total order, so
+    at the k boundary broken by ascending ``doc_id`` (total order, so
     the result is partition-invariant).
     """
     terms = sorted({t for _, qterms in queries for t in qterms})
     staged = df.select(
-        F.col(id_col), word_tokens(F.col(text_col)).alias("_t")
+        F.col("doc_id"), word_tokens(F.col("text")).alias("_t")
     )
     if n_partitions:
-        staged = staged.repartition(n_partitions, id_col)
+        staged = staged.repartition(n_partitions, "doc_id")
     per_doc = staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("_t").alias("dl"),
         *[_tf_expr(F.col("_t"), t).alias(f"tf_{t}") for t in terms],
     ).localCheckpoint()
@@ -109,7 +107,7 @@ def bm25_topk(
     if n_docs == 0:
         return per_doc.select(
             F.lit("").alias("query_id"),
-            F.col(id_col),
+            F.col("doc_id"),
             F.lit(0.0).alias("score"),
         ).limit(0)
     avgdl = float(stats["sdl"]) / n_docs
@@ -135,10 +133,10 @@ def bm25_topk(
             per_doc.filter(any_hit > 0)
             .select(
                 F.lit(query_id).alias("query_id"),
-                F.col(id_col),
+                F.col("doc_id"),
                 F.round(score, 6).alias("score"),
             )
-            .orderBy(F.desc("score"), F.col(id_col))
+            .orderBy(F.desc("score"), F.col("doc_id"))
             .limit(k)
         )
     return reduce(DataFrame.unionByName, limbs)

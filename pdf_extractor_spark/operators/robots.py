@@ -58,21 +58,16 @@ def _pattern_regex(pattern: Column) -> Column:
     )
 
 
-def prepare_rules(
-    rules: DataFrame,
-    host_col: str = "host",
-    type_col: str = "rule_type",
-    pattern_col: str = "pattern",
-) -> DataFrame:
+def prepare_rules(rules: DataFrame) -> DataFrame:
     """(host, rule_type, pattern) -> (host, rx, match_len, is_allow).
 
     ``match_len`` is the RFC's specificity measure: the octet length of
     the pattern (trailing ``$`` excluded — it matches no octets).
     """
     p = rules.select(
-        F.col(host_col).alias("host"),
-        (F.col(type_col) == "allow").alias("is_allow"),
-        F.col(pattern_col).alias("pattern"),
+        F.col("host"),
+        (F.col("rule_type") == "allow").alias("is_allow"),
+        F.col("pattern"),
     )
     body_len = F.when(
         F.col("pattern").endswith("$"), F.length("pattern") - 1
@@ -86,29 +81,21 @@ def prepare_rules(
     )
 
 
-def robots_decisions(
-    pages: DataFrame,
-    rules: DataFrame,
-    id_col: str = "doc_id",
-    url_col: str = "url",
-    host_col: str = "host",
-    type_col: str = "rule_type",
-    pattern_col: str = "pattern",
-) -> DataFrame:
+def robots_decisions(pages: DataFrame, rules: DataFrame) -> DataFrame:
     """Per-page fetch permission under the given robots rule set.
 
-    Returns (id_col, host, path, allowed, rule_pattern) where
+    Returns (doc_id, host, path, allowed, rule_pattern) where
     ``rule_pattern`` is the winning rule (null when no rule matched).
     """
-    prepped = prepare_rules(rules, host_col, type_col, pattern_col)
-    u = F.col(url_col)
+    prepped = prepare_rules(rules)
+    u = F.col("url")
     host = F.regexp_replace(
         F.lower(F.regexp_extract(u, HOSTPORT_RE, 1)), r":[0-9]+$", ""
     )
     path = F.regexp_extract(u, PATH_RE, 1)
     path = F.when(F.length(path) == 0, F.lit("/")).otherwise(path)
     keyed = pages.select(
-        F.col(id_col).alias("id"), host.alias("host"), path.alias("path")
+        F.col("doc_id").alias("id"), host.alias("host"), path.alias("path")
     )
     hits = keyed.join(F.broadcast(prepped), "host", "left").withColumn(
         "_match",
@@ -126,7 +113,7 @@ def robots_decisions(
     ).alias("_best")
     agg = hits.groupBy("id", "host", "path").agg(best)
     return agg.select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         "host",
         "path",
         F.coalesce(F.col("_best.a") == 1, F.lit(True)).alias("allowed"),

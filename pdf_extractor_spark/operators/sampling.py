@@ -31,16 +31,13 @@ def _hash_frac(col: Column, salt: str) -> Column:
     return out / float(16**8)
 
 
-def deterministic_sample(
-    df: DataFrame, rate: float, key_col: str, salt: str = "sample"
-) -> DataFrame:
+def deterministic_sample(df: DataFrame, rate: float, key_col: str) -> DataFrame:
     """Reproducible Bernoulli-style sample: row kept iff hash_frac < rate.
 
     Pure filter — pushes to the scan, no shuffle, independent of partition
-    layout. Different ``salt`` values give independent samples of the same
-    table (train/dev/test splits = disjoint salt-interval filters).
+    layout.
     """
-    return df.filter(_hash_frac(F.col(key_col), salt) < rate)
+    return df.filter(_hash_frac(F.col(key_col), "sample") < rate)
 
 
 def kmv_distinct(
@@ -212,15 +209,13 @@ def stratified_rate_expr(
     return rate
 
 
-def quality_keep_expr(
-    key: Column, text: Column, salt: str = "qsample"
-) -> Column:
+def quality_keep_expr(key: Column, text: Column) -> Column:
     """Soft quality-weighted keep decision (keep probability = quality
     score/100, md5-keyed) of the curation job: the predicate of the
     ``t_quality_weighted_sample`` query."""
     from pdf_extractor_spark.operators.textstats import quality_score
 
-    return _hash_frac(key, salt) < quality_score(text) / 100.0
+    return _hash_frac(key, "qsample") < quality_score(text) / 100.0
 
 
 def stratified_sample(
@@ -229,7 +224,6 @@ def stratified_sample(
     strata_col: str,
     key_col: str,
     default_rate: float = 0.0,
-    salt: str = "strat",
 ) -> DataFrame:
     """Per-stratum deterministic sampling — the corpus REBALANCING op
     (downsample the dominant language/source, keep the long tail whole).
@@ -241,7 +235,7 @@ def stratified_sample(
     ``default_rate`` (use 1.0 to keep unlisted strata whole).
     """
     rate = stratified_rate_expr(rates, strata_col, default_rate)
-    return df.filter(_hash_frac(F.col(key_col), salt) < rate)
+    return df.filter(_hash_frac(F.col(key_col), "strat") < rate)
 
 
 def _md5_pos(col: Column, salt: str, m_bits: int) -> Column:
@@ -389,7 +383,6 @@ def target_mix_sample(
     strata_col: str,
     key_col: str,
     default_target: float = 0.0,
-    salt: str = "mix",
 ) -> DataFrame:
     """Resample toward TARGET mixture shares (the data-MIXING step of
     curation: Pile/DoReMi-style domain weights, downsample-only).
@@ -423,7 +416,7 @@ def target_mix_sample(
     )
     return (
         df.join(F.broadcast(rates), strata_col)
-        .filter(_hash_frac(F.col(key_col), salt) < F.col("_rate"))
+        .filter(_hash_frac(F.col(key_col), "mix") < F.col("_rate"))
         .drop("_rate")
     )
 
@@ -434,7 +427,6 @@ def dsir_importance(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_buckets: int = 64,
-    scale_ppm: int = 1_000_000,
     n_partitions: int | None = None,
 ) -> DataFrame:
     """DSIR-style hashed-n-gram importance weights (Xie et al., NeurIPS
@@ -452,7 +444,7 @@ def dsir_importance(
     integer PARTS-PER-MILLION (floor) and summed as exact integers, so
     the result is bit-identical across engines, partitionings and
     summation orders — no float accumulation anywhere. ``keep`` is
-    avg_ppm >= scale_ppm, i.e. "more target-like than target-neutral".
+    avg_ppm >= 1,000,000, i.e. "more target-like than target-neutral".
 
     Plan shape: one explode -> two 64-key groupBy counts (map-side
     partial agg collapses each mapper's output to <= B rows regardless of
@@ -490,7 +482,7 @@ def dsir_importance(
             (
                 (F.col("tgt_c").cast("bigint") + 1)
                 * (F.col("raw_tot").cast("bigint") + b)
-                * F.lit(scale_ppm).cast("bigint")
+                * F.lit(1_000_000).cast("bigint")
             )
             .cast("bigint")
             .alias("_num"),
@@ -519,7 +511,7 @@ def dsir_importance(
         "n_tokens",
         "importance_ppm",
         avg.alias("avg_ppm"),
-        (avg >= F.lit(scale_ppm)).alias("keep"),
+        (avg >= F.lit(1_000_000)).alias("keep"),
     )
 
 
@@ -528,7 +520,6 @@ def temperature_mix_sample(
     strata_col: str,
     key_col: str,
     alpha: float = 0.3,
-    salt: str = "tmix",
 ) -> DataFrame:
     """Temperature-based multilingual mixing (the alpha-sampling of
     multilingual LM training — Lample & Conneau 2019 §3.1, mBERT/mT5
@@ -566,7 +557,7 @@ def temperature_mix_sample(
     )
     return (
         df.join(F.broadcast(rates), strata_col)
-        .filter(_hash_frac(F.col(key_col), salt) < F.col("_rate"))
+        .filter(_hash_frac(F.col(key_col), "tmix") < F.col("_rate"))
         .drop("_rate")
     )
 
@@ -576,7 +567,6 @@ def curriculum_interleave(
     score_col: str,
     lang_col: str = "lang",
     id_col: str = "doc_id",
-    bucket_width: int = 10_000,
 ) -> DataFrame:
     """Curriculum ordering for training data (Bengio et al. ICML 2009;
     the data-ordering step of curriculum recipes): every document gets a
@@ -590,7 +580,7 @@ def curriculum_interleave(
 
     1. Within-language rank via the two-level shard pattern
        (m_pack_sequences discipline): rank inside (lang, score-bucket)
-       partitions — buckets are trunc(score / bucket_width), monotone in
+       partitions — buckets are trunc(score / 10,000), monotone in
        score — then add per-(lang, bucket) prefix offsets computed from a
        collected counts table (|langs| x |buckets| rows, bounded).
     2. The interleave position in CLOSED FORM from the |langs|-row count
@@ -604,7 +594,7 @@ def curriculum_interleave(
     base = df.select(
         F.col(id_col), F.col(lang_col).alias("lang"), F.col(score_col)
     )
-    bucket = F.expr(f"{score_col} div {bucket_width}").alias("_bk")
+    bucket = F.expr(f"{score_col} div 10000").alias("_bk")
     staged = base.select("*", bucket)
     w = Window.partitionBy("lang", "_bk").orderBy(
         F.col(score_col).desc(), F.col(id_col)

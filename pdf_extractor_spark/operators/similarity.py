@@ -49,8 +49,6 @@ def cosine_topk(
     df: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exclude_id: int | None = None,
 ) -> DataFrame:
     """Exact top-k by cosine to a literal query vector.
@@ -60,12 +58,12 @@ def cosine_topk(
     """
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     scored = df.select(
-        F.col(id_col),
-        F.round(cosine(F.col(vec_col), q), 6).alias("cosine_sim"),
+        F.col("vec_id"),
+        F.round(cosine(F.col("embedding"), q), 6).alias("cosine_sim"),
     )
     if exclude_id is not None:
-        scored = scored.filter(F.col(id_col) != exclude_id)
-    return scored.orderBy(F.desc("cosine_sim"), F.col(id_col)).limit(k)
+        scored = scored.filter(F.col("vec_id") != exclude_id)
+    return scored.orderBy(F.desc("cosine_sim"), F.col("vec_id")).limit(k)
 
 
 # --- LSH (random hyperplane / SRP) -------------------------------------------
@@ -102,8 +100,6 @@ def ann_topk(
     query_vec: list[float],
     k: int = 10,
     n_planes: int = DEFAULT_PLANES,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_flip: int = 0,
     exclude_id: int | None = None,
 ) -> DataFrame:
@@ -135,15 +131,15 @@ def ann_topk(
     flip_order = sorted(range(n_planes), key=lambda j: (round(abs(margins[j]), 6), j))
     probe_buckets = [qbits] + [qbits ^ (1 << j) for j in flip_order[: max(n_flip, 0)]]
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    cand = df.filter(srp_bucket(F.col(vec_col), planes).isin(probe_buckets))
+    cand = df.filter(srp_bucket(F.col("embedding"), planes).isin(probe_buckets))
     if exclude_id is not None:
-        cand = cand.filter(F.col(id_col) != exclude_id)
+        cand = cand.filter(F.col("vec_id") != exclude_id)
     return (
         cand.select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), q), 6).alias("cosine_sim"),
+            F.col("vec_id"),
+            F.round(cosine(F.col("embedding"), q), 6).alias("cosine_sim"),
         )
-        .orderBy(F.desc("cosine_sim"), F.col(id_col))
+        .orderBy(F.desc("cosine_sim"), F.col("vec_id"))
         .limit(k)
     )
 
@@ -152,8 +148,6 @@ def kmeans_iterations(
     df: DataFrame,
     k: int = 4,
     n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Spherical k-means for the IVF coarse quantizer: ``n_iter`` rounds of
     assign-to-nearest-centroid (cosine) + per-cluster mean.
@@ -170,9 +164,9 @@ def kmeans_iterations(
     """
     # seed with the k lowest ids (NOT `id < k`: ids may be non-contiguous
     # or non-zero-based, which would under-seed or return zero centroids)
-    seed_rows = df.orderBy(id_col).select(vec_col).limit(k).collect()
+    seed_rows = df.orderBy("vec_id").select("embedding").limit(k).collect()
     cents: list[list[float]] = [
-        [float(x) for x in r[vec_col]] for r in seed_rows
+        [float(x) for x in r["embedding"]] for r in seed_rows
     ]
     if len(cents) < k:
         raise ValueError(
@@ -183,11 +177,11 @@ def kmeans_iterations(
     for _ in range(n_iter):
         sims = [
             F.round(
-                cosine(F.col(vec_col), F.array(*[F.lit(c) for c in cent])), 6
+                cosine(F.col("embedding"), F.array(*[F.lit(c) for c in cent])), 6
             ).alias(f"_s{j}")
             for j, cent in enumerate(cents)
         ]
-        scored = df.select(F.col(id_col).alias("id"), F.col(vec_col), *sims)
+        scored = df.select(F.col("vec_id").alias("id"), F.col("embedding"), *sims)
         best = F.greatest(
             *[
                 F.struct(
@@ -197,13 +191,13 @@ def kmeans_iterations(
             ]
         )
         assigned = scored.select(
-            "id", F.col(vec_col), (-best.getField("nc")).alias("cluster")
+            "id", F.col("embedding"), (-best.getField("nc")).alias("cluster")
         )
         new_rows = (
             assigned.groupBy("cluster")
             .agg(
                 *[
-                    F.avg(F.col(vec_col)[i].cast("double")).alias(f"c{i}")
+                    F.avg(F.col("embedding")[i].cast("double")).alias(f"c{i}")
                     for i in range(dim)
                 ]
             )
@@ -217,14 +211,14 @@ def kmeans_iterations(
     return assigned.select("id", "cluster")
 
 
-def ivf_assign(df: DataFrame, vec_col: str = "embedding", label_col: str = "label") -> DataFrame:
+def ivf_assign(df: DataFrame) -> DataFrame:
     """IVF coarse quantizer: per-group centroids (here seeded by ``label``;
     at scale the groups come from k-means iterations of exactly this step)
     and each vector's nearest-centroid assignment + residual similarity."""
-    dim_row = df.select(F.size(F.col(vec_col)).alias("d")).first()
+    dim_row = df.select(F.size(F.col("embedding")).alias("d")).first()
     dim = dim_row["d"]
-    cent = df.groupBy(label_col).agg(
-        F.array(*[F.avg(F.col(vec_col)[i].cast("double")) for i in range(dim)]).alias(
+    cent = df.groupBy("label").agg(
+        F.array(*[F.avg(F.col("embedding")[i].cast("double")) for i in range(dim)]).alias(
             "centroid"
         )
     )
@@ -235,9 +229,6 @@ def ivf_topk(
     df: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
     n_probe: int = 1,
 ) -> DataFrame:
     """IVF-style ANN: score only the vectors whose cluster centroid is among
@@ -249,7 +240,7 @@ def ivf_topk(
     so the probe is a partition-pruned scan — the standard IVF trade:
     recall vs clusters probed.
     """
-    cent_rows = ivf_assign(df, vec_col, label_col).collect()
+    cent_rows = ivf_assign(df).collect()
 
     def cos(a: list[float], b: list[float]) -> float:
         dp = sum(x * y for x, y in zip(a, b))
@@ -263,18 +254,18 @@ def ivf_topk(
         cent_rows,
         key=lambda r: (
             -round(cos(query_vec, [float(x) for x in r["centroid"]]), 6),
-            r[label_col],
+            r["label"],
         ),
     )[:n_probe]
-    probe_ids = [r[label_col] for r in probes]
+    probe_ids = [r["label"] for r in probes]
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
-        df.filter(F.col(label_col).isin(probe_ids))
+        df.filter(F.col("label").isin(probe_ids))
         .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), q), 6).alias("cosine_sim"),
+            F.col("vec_id"),
+            F.round(cosine(F.col("embedding"), q), 6).alias("cosine_sim"),
         )
-        .orderBy(F.desc("cosine_sim"), F.col(id_col))
+        .orderBy(F.desc("cosine_sim"), F.col("vec_id"))
         .limit(k)
     )
 
@@ -283,25 +274,23 @@ def cosine_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.95,
     n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via SRP-bucket blocking + exact rescore.
 
     Same shape as minhash_lsh_pairs: bucket equi-join (shuffle on a short
     key), exact cosine only on candidates.
     """
-    dim_row = df.select(F.size(F.col(vec_col)).alias("d")).first()
+    dim_row = df.select(F.size(F.col("embedding")).alias("d")).first()
     planes = hyperplanes(n_planes, dim_row["d"])
     # norm computed ONCE per row and carried through the join — norm(a) *
     # norm(b) per candidate pair would triple the interpreted
     # higher-order-function work (HOF lambdas are CodegenFallback); same
     # arithmetic, bit-identical quotient
     keyed = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        norm(F.col(vec_col)).alias("n"),
-        srp_bucket(F.col(vec_col), planes).alias("bucket"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("v"),
+        norm(F.col("embedding")).alias("n"),
+        srp_bucket(F.col("embedding"), planes).alias("bucket"),
     )
     a, b = keyed.alias("a"), keyed.alias("b")
     denom = F.col("a.n") * F.col("b.n")
@@ -323,9 +312,6 @@ def hard_negative_pairs(
     df: DataFrame,
     k: int = 3,
     n_planes: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Hard-negative mining for contrastive / classifier training data:
     for each anchor vector, the ``k`` most-cosine-similar vectors carrying
@@ -343,14 +329,14 @@ def hard_negative_pairs(
     """
     from pyspark.sql import Window
 
-    dim_row = df.select(F.size(F.col(vec_col)).alias("d")).first()
+    dim_row = df.select(F.size(F.col("embedding")).alias("d")).first()
     planes = hyperplanes(n_planes, dim_row["d"])
     keyed = df.select(
-        F.col(id_col).alias("id"),
-        F.col(label_col).alias("label"),
-        F.col(vec_col).alias("v"),
-        norm(F.col(vec_col)).alias("n"),
-        srp_bucket(F.col(vec_col), planes).alias("bucket"),
+        F.col("vec_id").alias("id"),
+        F.col("label"),
+        F.col("embedding").alias("v"),
+        norm(F.col("embedding")).alias("n"),
+        srp_bucket(F.col("embedding"), planes).alias("bucket"),
     )
     a, b = keyed.alias("a"), keyed.alias("b")
     denom = F.col("a.n") * F.col("b.n")
@@ -380,8 +366,6 @@ def semdedup(
     k: int = 4,
     n_iter: int = 2,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     shards: int | None = None,
     max_cluster: int | None = None,
 ) -> DataFrame:
@@ -430,19 +414,19 @@ def semdedup(
     Clusters at or under the cap dedup exactly as in the uncapped path.
     No window, no driver-side pair loop.
 
-    Returns (id_col, cluster, keep) for every input row.
+    Returns (vec_id, cluster, keep) for every input row.
     """
     asg = kmeans_iterations(
-        df, k=k, n_iter=n_iter, id_col=id_col, vec_col=vec_col
+        df, k=k, n_iter=n_iter
     ).localCheckpoint()
     # the salt spreads work only — the pair set, and therefore the output,
     # is invariant to the shard count (tested at shards=2 vs 7)
     if shards is None:
         shards = max(2, df.sparkSession.sparkContext.defaultParallelism)
     vecs = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("_v"),
-        norm(F.col(vec_col)).alias("_n"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("_v"),
+        norm(F.col("embedding")).alias("_n"),
     )
     cl = asg.join(vecs, "id")
     pair_src = cl
@@ -486,7 +470,7 @@ def semdedup(
         .withColumn("_dup", F.lit(True))
     )
     return asg.join(dropped, "id", "left").select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("vec_id"),
         F.col("cluster").cast("bigint").alias("cluster"),
         F.coalesce(~F.col("_dup"), F.lit(True)).alias("keep"),
     )
@@ -499,9 +483,6 @@ def mine_bitext_pairs(
     n_planes: int = 6,
     min_sim: float = 0.5,
     margin: float = 1.05,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Parallel-pair (bitext) mining over a multilingual embedding space —
     the margin criterion of Artetxe & Schwenk (ACL 2019, "Margin-based
@@ -523,14 +504,14 @@ def mine_bitext_pairs(
     """
     from pyspark.sql import Window
 
-    dim_row = df.select(F.size(F.col(vec_col)).alias("d")).first()
+    dim_row = df.select(F.size(F.col("embedding")).alias("d")).first()
     planes = hyperplanes(n_planes, dim_row["d"])
     keyed = df.select(
-        F.col(id_col).alias("id"),
-        F.col(label_col).alias("label"),
-        F.col(vec_col).alias("v"),
-        norm(F.col(vec_col)).alias("n"),
-        srp_bucket(F.col(vec_col), planes).alias("bucket"),
+        F.col("vec_id").alias("id"),
+        F.col("label"),
+        F.col("embedding").alias("v"),
+        norm(F.col("embedding")).alias("n"),
+        srp_bucket(F.col("embedding"), planes).alias("bucket"),
     )
     src = keyed.filter(F.col("label") == src_label).alias("a")
     tgt = keyed.filter(F.col("label") == tgt_label).alias("b")
@@ -582,8 +563,6 @@ def pq_train(
     m: int = 2,
     k: int = 4,
     n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[DataFrame, list[list[list[float]]]]:
     """Train the product quantizer and return ``(codes, codebooks)``.
 
@@ -595,7 +574,7 @@ def pq_train(
     lookup tables. Determinism and per-round plan shape are documented on
     ``pq_encode``.
     """
-    dim_row = df.select(F.size(F.col(vec_col)).alias("d")).first()
+    dim_row = df.select(F.size(F.col("embedding")).alias("d")).first()
     dim = dim_row["d"]
     if dim % m != 0:
         raise ValueError(f"pq_encode: dim {dim} not divisible by m={m}")
@@ -604,8 +583,8 @@ def pq_train(
     books: list[list[list[float]]] = []
     for s in range(m):
         sdf = df.select(
-            F.col(id_col).alias("id"),
-            F.slice(F.col(vec_col), s * sub + 1, sub).alias("sv"),
+            F.col("vec_id").alias("id"),
+            F.slice(F.col("embedding"), s * sub + 1, sub).alias("sv"),
         )
         seed_rows = sdf.orderBy("id").select("sv").limit(k).collect()
         cents: list[list[float]] = [
@@ -669,8 +648,6 @@ def pq_encode(
     m: int = 2,
     k: int = 4,
     n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Product quantization (Jegou, Douze & Schmid, TPAMI 2011 — the PQ
     half of an IVF-PQ index): split each vector into ``m`` subspaces,
@@ -690,15 +667,15 @@ def pq_encode(
     rows — the corpus never shuffles on anything wider than the cluster
     id, and the m subspaces reuse the same scan.
     """
-    out, _ = pq_train(df, m=m, k=k, n_iter=n_iter, id_col=id_col, vec_col=vec_col)
+    out, _ = pq_train(df, m=m, k=k, n_iter=n_iter)
     return out
 
 
-def _round_half_up(x: float, nd: int = 6) -> float:
+def _round_half_up(x: float) -> float:
     """round() half-AWAY-from-zero for non-negative floats — the rounding
     Spark's ``F.round`` and DuckDB's ``round`` share; Python's built-in
     rounds half-to-even and would diverge on exact .5 boundaries."""
-    scale = 10**nd
+    scale = 10**6
     return math.floor(x * scale + 0.5) / scale
 
 
@@ -709,8 +686,6 @@ def pq_adc_topk(
     m: int = 2,
     k: int = 4,
     n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exclude_id: int | None = None,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes — the search half of
@@ -730,9 +705,7 @@ def pq_adc_topk(
     the driver (matching F.round/DuckDB round), so the summed distance is
     an exact two-term sum of 6-dp values in every engine.
     """
-    codes, books = pq_train(
-        df, m=m, k=k, n_iter=n_iter, id_col=id_col, vec_col=vec_col
-    )
+    codes, books = pq_train(df, m=m, k=k, n_iter=n_iter)
     sub = len(books[0][0])
     adc = F.lit(0.0)
     for s, book in enumerate(books):
@@ -745,13 +718,13 @@ def pq_adc_topk(
             F.array(*[F.lit(v) for v in lut]), F.col(f"code_{s}") + 1
         )
     scored = codes.select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("vec_id"),
         *[F.col(f"code_{s}") for s in range(m)],
         F.round(adc, 6).alias("adc_dist"),
     )
     if exclude_id is not None:
-        scored = scored.filter(F.col(id_col) != exclude_id)
-    return scored.orderBy(F.asc("adc_dist"), F.col(id_col)).limit(topk)
+        scored = scored.filter(F.col("vec_id") != exclude_id)
+    return scored.orderBy(F.asc("adc_dist"), F.col("vec_id")).limit(topk)
 
 
 def mmr_rerank(
@@ -760,8 +733,6 @@ def mmr_rerank(
     n_cand: int = 10,
     n_pick: int = 5,
     lam: float = 0.7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exclude_id: int | None = None,
 ) -> DataFrame:
     """Maximal-marginal-relevance rerank (Carbonell & Goldstein, SIGIR'98):
@@ -779,11 +750,10 @@ def mmr_rerank(
     the (score DESC, id ASC) argmax.
     """
     cand = cosine_topk(
-        df, query_vec, k=n_cand, id_col=id_col, vec_col=vec_col,
-        exclude_id=exclude_id,
-    ).select(F.col(id_col).alias("cid"), F.col("cosine_sim").alias("qsim"))
+        df, query_vec, k=n_cand, exclude_id=exclude_id,
+    ).select(F.col("vec_id").alias("cid"), F.col("cosine_sim").alias("qsim"))
     cemb = (
-        df.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("v"))
+        df.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("v"))
         .join(F.broadcast(cand), "cid")
         .localCheckpoint()
     )
@@ -831,7 +801,7 @@ def mmr_rerank(
         sel_ids.append(row["cid"])
     spark = df.sparkSession
     return spark.createDataFrame(
-        picked, f"rank int, {id_col} long, qsim double, score double"
+        picked, "rank int, vec_id long, qsim double, score double"
     )
 
 
@@ -839,9 +809,6 @@ def knn_graph(
     df: DataFrame,
     k: int = 4,
     sample_n: int = 150,
-    salt: str = "knng",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Mutual k-NN graph over a deterministic md5 sample of the embedding
     table: per-node out-edges are the exact-cosine top-``k`` neighbors
@@ -862,14 +829,12 @@ def knn_graph(
     integer micro-units summed exactly (order-invariant), divided once —
     bit-identical across engines.
     """
-    samp, mut = mutual_knn_edges(
-        df, k=k, sample_n=sample_n, salt=salt, id_col=id_col, vec_col=vec_col
-    )
+    samp, mut = mutual_knn_edges(df, k=k, sample_n=sample_n)
     agg = mut.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("deg"), F.sum("sim_u").alias("su")
     )
     return samp.join(agg, "id", "left").select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("vec_id"),
         F.coalesce("deg", F.lit(0)).cast("bigint").alias("mutual_degree"),
         F.when(F.col("deg").isNull(), F.lit(0.0))
         .otherwise(
@@ -884,8 +849,6 @@ def mutual_knn_edges(
     k: int = 4,
     sample_n: int = 150,
     salt: str = "knng",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
     """The (sample, mutual-edge-list) pair behind ``knn_graph``: sample is
     (id, v, n) for the deterministic md5 sample, edges are the SYMMETRIC
@@ -895,9 +858,9 @@ def mutual_knn_edges(
     ``knn_graph`` for the scale posture."""
     samp = (
         df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
-            norm(F.col(vec_col)).alias("n"),
+            F.col("vec_id").alias("id"),
+            F.col("embedding").alias("v"),
+            norm(F.col("embedding")).alias("n"),
         )
         .orderBy(
             F.md5(F.concat(F.lit(salt + ":"), F.col("id").cast("string"))),

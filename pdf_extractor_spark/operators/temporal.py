@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+BUCKET_SECONDS = 3600  # interval_join's time-bucket width
+
 
 def asof_join(
     left: DataFrame,
@@ -94,7 +96,6 @@ def interval_join(
     ts_col: str = "ts",
     start_col: str = "start_ts",
     end_col: str = "end_ts",
-    bucket_seconds: int = 3600,
 ) -> DataFrame:
     """Range/interval join: point rows matched to interval rows of the same
     key with ``start <= ts < end`` — WITHOUT the nested-loop fallback Spark
@@ -105,16 +106,16 @@ def interval_join(
     length / bucket width), each point lands in exactly one bucket, and the
     join becomes an EQUI-join on (key, bucket) + a residual predicate
     filter. A point matches an interval only via the point's own bucket, so
-    no dedup is needed. Pick ``bucket_seconds`` ~ the typical interval
-    length: shorter -> more interval replication, longer -> more false
-    candidates filtered after the join.
+    no dedup is needed. The bucket is ``BUCKET_SECONDS`` wide, about a
+    typical interval's length: shorter means more interval replication,
+    longer more false candidates filtered after the join.
 
     Returns all point columns plus the matched interval's columns
     (inner join; points in no interval drop out).
     """
-    b_pt = F.floor(F.unix_timestamp(F.col(ts_col)) / bucket_seconds)
-    b_lo = F.floor(F.unix_timestamp(F.col(start_col)) / bucket_seconds)
-    b_hi = F.floor(F.unix_timestamp(F.col(end_col)) / bucket_seconds)
+    b_pt = F.floor(F.unix_timestamp(F.col(ts_col)) / BUCKET_SECONDS)
+    b_lo = F.floor(F.unix_timestamp(F.col(start_col)) / BUCKET_SECONDS)
+    b_hi = F.floor(F.unix_timestamp(F.col(end_col)) / BUCKET_SECONDS)
     # explicit string aliases: when points and intervals derive from the same
     # parent DataFrame, df[col] references are ambiguous under self-join
     # lineage (Spark warns 'trivially true equals predicate'); alias-qualified

@@ -162,7 +162,6 @@ def winnow_fingerprints_df(
     text_col: str = "text",
     k: int = 5,
     w: int = 8,
-    normalize: bool = True,
     n_partitions: int | None = None,
 ) -> DataFrame:
     """Linear-time winnowing over a corpus -> (id, fp) rows, distinct.
@@ -182,11 +181,7 @@ def winnow_fingerprints_df(
     """
     from pyspark.sql import Window
 
-    norm = (
-        F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"[^a-z0-9]+", " "))
-        if normalize
-        else F.col(text_col)
-    )
+    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"[^a-z0-9]+", " "))
     if n_partitions is None:
         n_partitions = df.sparkSession.sparkContext.defaultParallelism
     staged = df.select(
@@ -331,8 +326,6 @@ def char_ngrams_from_chars(ch: Column, k: int) -> Column:
 
 def trigram_typicality_df(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_partitions: int | None = None,
 ) -> DataFrame:
     """CCNet-class frequency-LM quality signal without the transcendentals:
@@ -362,8 +355,8 @@ def trigram_typicality_df(
     a short-key shuffle or a broadcast; no window, no driver collect.
     """
     staged = df.select(
-        F.col(id_col).alias("id"),
-        F.split(F.lower(F.col(text_col)), "").alias("_ch"),
+        F.col("doc_id").alias("id"),
+        F.split(F.lower(F.col("text")), "").alias("_ch"),
     )
     if n_partitions:
         staged = staged.repartition(n_partitions, "id")
@@ -385,7 +378,7 @@ def trigram_typicality_df(
     tot = df.agg(
         F.sum(
             F.greatest(
-                F.length(F.lower(F.col(text_col))) - 2, F.lit(0)
+                F.length(F.lower(F.col("text"))) - 2, F.lit(0)
             ).cast("bigint")
         ).alias("total")
     )
@@ -398,7 +391,7 @@ def trigram_typicality_df(
         )
     )
     return doc.crossJoin(F.broadcast(tot)).select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         F.col("n_tri").cast("bigint").alias("n_tri"),
         F.col("familiarity").cast("bigint").alias("familiarity"),
         F.round(
@@ -428,7 +421,6 @@ def c4_clean(
     lines: DataFrame,
     min_words: int = 3,
     min_kept_lines: int = 3,
-    joiner: str = " ",
 ) -> DataFrame:
     """C4-style page cleanup (Raffel et al., JMLR 2020 §2.2 — the public
     heuristics behind the C4 corpus, from scratch) over a generic line
@@ -508,7 +500,7 @@ def c4_clean(
             & ~F.col("has_brace")
         ).alias("keep"),
         F.concat_ws(
-            joiner, F.transform(F.col("_kept"), lambda s: s.getField("line"))
+            " ", F.transform(F.col("_kept"), lambda s: s.getField("line"))
         ).alias("clean_text"),
     )
 
@@ -664,14 +656,13 @@ def compression_stats(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    level: int = 6,
     n_partitions: int | None = None,
 ) -> DataFrame:
     """zlib compression-ratio screen (the RefinedWeb/MassiveText cheap
     redundancy check: text that DEFLATE shrinks too well is repetitive
     boilerplate/spam; text that barely shrinks is often binary junk or
     high-entropy noise). Emits per doc the utf-8 byte count, the
-    deflate(level)-compressed byte count, and the integer ratio in ppm —
+    deflate(level 6)-compressed byte count, and the integer ratio in ppm —
     ``ratio_ppm = (1e6 * n_compressed) div n_bytes`` (0 for empty text).
 
     Engine shape: one Arrow-batched ``mapInPandas`` over (id, text) — zlib
@@ -697,7 +688,7 @@ def compression_stats(
             ids = pdf[id_col]
             raw = pdf[text_col].fillna("").map(lambda s: s.encode("utf-8"))
             n_bytes = raw.map(len)
-            n_comp = raw.map(lambda b: len(zlib.compress(b, level)))
+            n_comp = raw.map(lambda b: len(zlib.compress(b, 6)))
             ratio = [
                 (1000000 * c) // n if n > 0 else 0
                 for c, n in zip(n_comp, n_bytes)
@@ -717,12 +708,7 @@ def compression_stats(
     return proj.repartition(n_partitions, id_col).mapInPandas(_batches, schema)
 
 
-def justext_blocks(
-    segs: DataFrame,
-    stopwords: tuple[str, ...] = ("a", "the"),
-    min_tokens_short: int = 3,
-    stop_ppm_good: int = 200_000,
-) -> DataFrame:
+def justext_blocks(segs: DataFrame) -> DataFrame:
     """jusText-style block classification (Pomikálek 2011): per-block
     CONTEXT-FREE classing by stopword density, then CONTEXT-SENSITIVE
     smoothing where short blocks inherit 'good' only when both adjacent
@@ -733,11 +719,11 @@ def justext_blocks(
 
     Contract (the synthetic corpus has no markup, so blocks are the
     fixed-token segments of ``dedup.token_segments`` and the original's
-    link-density term has no signal): a block with fewer than
-    ``min_tokens_short`` tokens is 'short'; otherwise 'good' iff its
-    stopword density (integer ppm — exact on both engines) is >=
-    ``stop_ppm_good``, else 'bad'. Smoothing: 'short' -> 'good' iff the
-    previous AND next block's context-free class are both 'good' (a
+    link-density term has no signal): a block with fewer than 3 tokens is
+    'short'; otherwise 'good' iff its density of the stopwords "a" and
+    "the" (integer ppm — exact on both engines) is >= 200,000, else 'bad'.
+    Smoothing: 'short' -> 'good' iff the previous AND next block's
+    context-free class are both 'good' (a
     missing neighbor at a document edge counts as 'bad' — jusText's
     header/footer prior).
 
@@ -747,7 +733,7 @@ def justext_blocks(
     ``segs`` must be (id, idx, seg_text) from token_segments.
     """
     toks = F.split(F.col("seg_text"), " ")
-    stop_arr = F.array(*[F.lit(s) for s in stopwords])
+    stop_arr = F.array(*[F.lit(s) for s in ("a", "the")])
     n_tok = F.size(toks)
     stop_cnt = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
     staged = segs.select(
@@ -761,8 +747,8 @@ def justext_blocks(
         F.expr("CAST(1000000 * n_stop AS BIGINT) div greatest(n_tokens, 1)"),
     )
     cf = (
-        F.when(F.col("n_tokens") < min_tokens_short, F.lit("short"))
-        .when(F.col("stop_ppm") >= stop_ppm_good, F.lit("good"))
+        F.when(F.col("n_tokens") < 3, F.lit("short"))
+        .when(F.col("stop_ppm") >= 200_000, F.lit("good"))
         .otherwise(F.lit("bad"))
     )
     from pyspark.sql import Window
@@ -813,8 +799,6 @@ def strip_invisible(col: Column) -> Column:
 
 def unicode_clean(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_partitions: int | None = None,
 ) -> DataFrame:
     """Unicode hygiene: strip invisibles/controls, then NFC-normalize —
@@ -837,9 +821,9 @@ def unicode_clean(
 
     if n_partitions is None:
         n_partitions = df.sparkSession.sparkContext.defaultParallelism
-    id_type = df.schema[id_col].dataType.simpleString()
+    id_type = df.schema["doc_id"].dataType.simpleString()
     schema = (
-        f"{id_col} {id_type}, n_in bigint, n_stripped bigint, "
+        f"doc_id {id_type}, n_in bigint, n_stripped bigint, "
         "n_out bigint, nfc_changed boolean, clean_md5 string"
     )
 
@@ -860,7 +844,7 @@ def unicode_clean(
                 md5s.append(hashlib.md5(clean.encode("utf-8")).hexdigest())
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "n_in": pd.Series(n_in, index=pdf.index, dtype="int64"),
                     "n_stripped": pd.Series(
                         n_stripped, index=pdf.index, dtype="int64"
@@ -872,11 +856,11 @@ def unicode_clean(
             )
 
     proj = df.select(
-        F.col(id_col),
-        F.col(text_col).alias("_raw"),
-        strip_invisible(F.col(text_col)).alias("_stripped"),
+        F.col("doc_id"),
+        F.col("text").alias("_raw"),
+        strip_invisible(F.col("text")).alias("_stripped"),
     )
     # single-split driver parquet: repartition so the Arrow stage fans out
-    return proj.repartition(n_partitions, id_col).mapInPandas(
+    return proj.repartition(n_partitions, "doc_id").mapInPandas(
         _batches, schema
     )

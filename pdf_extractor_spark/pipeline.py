@@ -29,8 +29,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pdf_extractor_spark.extract.udfs import ExtractContext, make_extract_udf
 from pdf_extractor_spark.sources import catalog
 
-RESULT_COLUMNS = ["url", "warc_ts", "lang", "text", "spans", "n_blocks", "kind", "ok", "error"]
-
 _NOTHING = {"snapshot": None, "rows": 0, "marker": None}
 
 
@@ -56,15 +54,7 @@ def extract_documents(
         df = df.repartition(n_partitions, F.col("url"))
     extracted = df.withColumn("_x", make_extract_udf(context)(F.col("html")))
     keep = [c for c in ["url", "warc_ts", "lang", "html"] if c in df.columns]
-    return extracted.select(
-        *keep,
-        F.col("_x.text").alias("text"),
-        F.col("_x.spans").alias("spans"),
-        F.col("_x.n_blocks").alias("n_blocks"),
-        F.col("_x.kind").alias("kind"),
-        F.col("_x.ok").alias("ok"),
-        F.col("_x.error").alias("error"),
-    )
+    return extracted.select(*keep, "_x.*")
 
 
 def _extract_sized(

@@ -89,26 +89,4 @@ STATEMENT = StructType(
     ]
 )
 
-NOTE_TABLE = StructType(
-    [
-        StructField("table_id", StringType()),
-        StructField("table_title", StringType()),
-        StructField("table_description", StringType()),
-        StructField("table_type", StringType()),  # time_series|matrix
-        StructField("metadata", METADATA),
-        StructField("lines", ArrayType(LINE_ITEM)),
-    ]
-)
-
-NOTE = StructType(
-    [
-        StructField("note_id", StringType()),
-        StructField("note_title", StringType()),
-        StructField("parent_statement", StringType()),
-        StructField("metadata", METADATA),
-        StructField("extraction_notes", ArrayType(StringType())),
-        StructField("tables", ArrayType(NOTE_TABLE)),
-    ]
-)
-
 ALLOWED_MULTIPLIERS = [1, 1_000, 1_000_000, 1_000_000_000]

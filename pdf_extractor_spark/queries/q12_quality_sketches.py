@@ -1419,14 +1419,14 @@ def e_ann_recall(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _mmr_round_sql(r: int, lam: str = "0.7") -> str:
+def _mmr_round_sql(r: int) -> str:
     """One greedy MMR round (r >= 2): redundancy = max pair-sim to the
     already-selected set, score rounded 6 dp, (score DESC, id) argmax."""
     prev = " UNION ALL ".join(f"SELECT vec_id FROM s{i}" for i in range(1, r))
     return f"""
     sel{r} AS ({prev}),
     m{r} AS (SELECT c.cid, c.qsim,
-               round({lam} * c.qsim - (1 - {lam}) * coalesce(
+               round(0.7 * c.qsim - (1 - 0.7) * coalesce(
                  (SELECT max(p.ps) FROM pair p
                   WHERE p.ia = c.cid
                     AND p.ib IN (SELECT vec_id FROM sel{r})), 0), 6) AS score

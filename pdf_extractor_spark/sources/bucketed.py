@@ -33,14 +33,13 @@ def write_bucketed(
     path: str,
     key: str | list[str],
     n_buckets: int,
-    sort: bool = True,
 ) -> None:
     """Write ``df`` as an external parquet table bucketed by ``key``
     (one column or a composite — e.g. the LSH band index buckets on
     ``["band", "key"]`` so incremental probes join it shuffle-free).
 
-    ``sort=True`` additionally sort-buckets the files so bucketed joins
-    skip the per-task sort (SortMergeJoin reads pre-sorted runs).
+    The files are also sorted by ``key`` within each bucket, so bucketed
+    joins skip the per-task sort (SortMergeJoin reads pre-sorted runs).
     """
     keys = [key] if isinstance(key, str) else list(key)
     writer = (
@@ -48,9 +47,8 @@ def write_bucketed(
         .mode("overwrite")
         .option("path", path)
         .bucketBy(n_buckets, *keys)
+        .sortBy(*keys)
     )
-    if sort:
-        writer = writer.sortBy(*keys)
     writer.saveAsTable(table)
 
 

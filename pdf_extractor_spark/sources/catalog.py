@@ -261,13 +261,11 @@ def compact(spark: SparkSession, table_path: str) -> int:
     return _rewrite(spark, table_path)
 
 
-def remaining(
-    spark: SparkSession, input_df: DataFrame, table_path: str, key: str = "url"
-) -> DataFrame:
+def remaining(spark: SparkSession, input_df: DataFrame, table_path: str) -> DataFrame:
     """Resume frontier: input rows not present in any committed snapshot.
 
-    ``left_anti`` on the key — at 100 TB the committed side is read with only
-    the key column (column-pruned scan) and the join is a shuffle-free
+    ``left_anti`` on ``url`` — at 100 TB the committed side is read with only
+    that column (column-pruned scan) and the join is a shuffle-free
     broadcast when the done-set is small, else a standard shuffled anti-join.
     No ``distinct`` on the committed side: an anti-join ignores duplicate
     keys, and a distinct would add two aggregates and an exchange over
@@ -276,4 +274,4 @@ def remaining(
     done = read_committed(spark, table_path)
     if done is None:
         return input_df
-    return input_df.join(done.select(key), on=key, how="left_anti")
+    return input_df.join(done.select("url"), on="url", how="left_anti")

@@ -8,10 +8,9 @@ from pyspark.sql import DataFrame
 def save_curated_corpus(
     df: DataFrame,
     path: str,
-    partition_cols: tuple[str, ...] = ("lang",),
     max_records_per_file: int = 500_000,
 ) -> None:
-    """Corpus-output sink: parquet partitioned by ``partition_cols`` (the
+    """Corpus-output sink: parquet partitioned by ``lang`` (the
     layout a trainer consumes — per-language directories, partition-pruned
     reads for language-filtered runs) with bounded file sizes so no
     partition produces an unsplittable giant file. Pure writer config —
@@ -19,6 +18,6 @@ def save_curated_corpus(
     (
         df.write.mode("overwrite")
         .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy(*partition_cols)
+        .partitionBy("lang")
         .parquet(path)
     )

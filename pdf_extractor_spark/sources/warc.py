@@ -39,7 +39,6 @@ def build_warc_response(
     date: datetime.datetime,
     payload: bytes,
     content_type: str = "text/html",
-    http_status: str = "200 OK",
 ) -> bytes:
     """One WARC ``response`` record: WARC headers + an HTTP/1.1 response.
 
@@ -48,7 +47,7 @@ def build_warc_response(
     byte-comparable across runs and engines; no uuid4).
     """
     http = (
-        f"HTTP/1.1 {http_status}{CRLF.decode()}"
+        f"HTTP/1.1 200 OK{CRLF.decode()}"
         f"Content-Type: {content_type}{CRLF.decode()}"
         f"Content-Length: {len(payload)}{CRLF.decode()}{CRLF.decode()}"
     ).encode("ascii") + payload
@@ -140,8 +139,6 @@ def build_wat_metadata(
     url: str,
     date: datetime.datetime,
     payload_len: int,
-    content_type: str = "text/html",
-    http_status: int = 200,
 ) -> bytes:
     """One WAT ``metadata`` record — the Common Crawl per-page metadata
     sibling (what CC publishes as *.warc.wat.gz): same ISO 28500 framing,
@@ -161,11 +158,8 @@ def build_wat_metadata(
         f'"WARC-Date":"{wdate}"'
         '},"Payload-Metadata":{'
         f'"Actual-Content-Length":{payload_len},'
-        '"HTTP-Response-Metadata":{"Response-Message":{'
-        f'"Status":{http_status}'
-        '},"Headers":{'
-        f'"Content-Type":"{content_type}"'
-        "}}}}}"
+        '"HTTP-Response-Metadata":{"Response-Message":{"Status":200},'
+        '"Headers":{"Content-Type":"text/html"}}}}}'
     ).encode("ascii")
     headers = [
         b"WARC/1.0",

@@ -12,8 +12,6 @@ from __future__ import annotations
 
 import math
 
-import pytest
-
 SF = "/root/testdata/sf0.001"
 
 

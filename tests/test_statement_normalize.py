@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Row, functions as F
+from pyspark.sql import Row
 
 from pdf_extractor_spark.functions.statement import normalize_statement
 from tests.test_validate import SCHEMA, _item, _meta, _stmt

@@ -3,9 +3,7 @@
 
 from __future__ import annotations
 
-import pytest
-
-from pyspark.sql import Row, functions as F
+from pyspark.sql import Row
 from pyspark.sql.types import StructField, StructType, StringType
 
 from pdf_extractor_spark.functions.validate import validate_statements
