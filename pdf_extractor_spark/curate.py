@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 def curation_flags(
     df: DataFrame,
     rates: dict[str, float] | None = None,
-    default_rate: float = 1.0,
     n_partitions: int | None = None,
 ) -> DataFrame:
     """Input columns + boolean stage flags (f_gopher, f_first, f_sample).
@@ -72,7 +71,7 @@ def curation_flags(
     # drift from them
     q_keep = quality_keep_expr(F.col("doc_id"), F.col("text"))
     if rates is not None:
-        rate = stratified_rate_expr(rates, "lang", default_rate)
+        rate = stratified_rate_expr(rates, "lang", 1.0)
         s_keep = _hash_frac(F.col("doc_id"), "strat") < rate
     else:
         s_keep = F.lit(True)
@@ -89,19 +88,13 @@ def run_curation_job(
     df: DataFrame,
     output_path: str,
     rates: dict[str, float] | None = None,
-    default_rate: float = 1.0,
     n_partitions: int | None = None,
 ) -> dict:
     """Filter -> dedup -> sample -> partitioned corpus write; returns the
     stage-accounting metrics dict (one aggregation, then one write)."""
     from pdf_extractor_spark.sources.sinks import save_curated_corpus
 
-    flags = curation_flags(
-        df,
-        rates=rates,
-        default_rate=default_rate,
-        n_partitions=n_partitions,
-    )
+    flags = curation_flags(df, rates=rates, n_partitions=n_partitions)
     row = flags.agg(
         F.count(F.lit(1)).alias("rows_in"),
         F.sum(F.col("f_gopher").cast("long")).alias("after_filter"),

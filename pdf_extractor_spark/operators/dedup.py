@@ -154,12 +154,18 @@ def minhash_lsh_pairs(
     handled by exact/fingerprint dedup anyway — standard practice, cf.
     datasketch MinHashLSH's and BigQuery's bucket caps).
     """
-    banded = _drop_hot_buckets(
-        with_minhash_bands(
-            df, k=k, bands=bands, shingle_n=shingle_n, n_partitions=n_partitions
-        ),
-        max_bucket,
+    banded = with_minhash_bands(
+        df, k=k, bands=bands, shingle_n=shingle_n, n_partitions=n_partitions
     )
+    if max_bucket is not None:
+        # hot buckets are FEW by construction -> broadcast anti-join
+        hot = (
+            banded.groupBy("band", "key")
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .filter(F.col("_n") > max_bucket)
+            .select("band", "key")
+        )
+        banded = banded.join(F.broadcast(hot), ["band", "key"], "left_anti")
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -183,21 +189,6 @@ def jaccard_similarity(a: Column, b: Column) -> Column:
     return F.when(union <= 0, F.lit(0.0)).otherwise(
         F.round(inter.cast("double") / union, 6)
     )
-
-
-def _drop_hot_buckets(banded: DataFrame, max_bucket: int | None) -> DataFrame:
-    """(id, band, key) rows minus the buckets holding more than
-    ``max_bucket`` rows (all rows when ``max_bucket`` is None)."""
-    if max_bucket is None:
-        return banded
-    # hot buckets are FEW by construction -> broadcast anti-join
-    hot = (
-        banded.groupBy("band", "key")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > max_bucket)
-        .select("band", "key")
-    )
-    return banded.join(F.broadcast(hot), ["band", "key"], "left_anti")
 
 
 def _shingle_sets(

@@ -69,10 +69,6 @@ ALLOWED_DEFAULTS = {
     ("save_curated_corpus", "max_records_per_file"): (
         "the per-file record cap splits a partition into several files"
     ),
-    ("run_curation_job", "default_rate"): (
-        "the job keeps exactly the rows of the two contract sampling queries, "
-        "whose rate for unlisted languages is 0.8"
-    ),
 }
 
 

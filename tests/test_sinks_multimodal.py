@@ -139,7 +139,8 @@ def test_curation_job_stage_accounting_and_keep_set(spark, tmp_path):
         firsts.setdefault(h, doc_id)
     first_ids = set(firsts.values())
     # the sampling keep: both contract sampling queries, which use the
-    # job's rates ({"en": 0.1, "de": 0.4}, 0.8 otherwise) and salts
+    # job's salts and rates {"en": 0.1, "de": 0.4}, 0.8 for every other
+    # language
     sampled = {
         r["doc_id"] for r in qs["t_quality_weighted_sample"](spark, sf).collect()
     } & {r["doc_id"] for r in qs["t_stratified_sample"](spark, sf).collect()}
@@ -147,9 +148,9 @@ def test_curation_job_stage_accounting_and_keep_set(spark, tmp_path):
     assert expected  # non-trivial
 
     out = str(tmp_path / "curated_job")
-    metrics = run_curation_job(
-        spark, docs, out, rates={"en": 0.1, "de": 0.4}, default_rate=0.8
-    )
+    langs = {r["lang"] for r in docs.select("lang").distinct().collect()}
+    rates = {**{lang: 0.8 for lang in langs}, "en": 0.1, "de": 0.4}
+    metrics = run_curation_job(spark, docs, out, rates=rates)
     written = {
         r["doc_id"] for r in spark.read.parquet(out).select("doc_id").collect()
     }
